@@ -66,6 +66,12 @@ def _ledger_append(rows: list[dict], source: str = "bench.py") -> None:
                     + "\n")
 
 
+def _admitted(capacity) -> bool:
+    """The admission rule: a round counts only if its measured capacity
+    ratio reaches CAPACITY_MIN; a row with no capacity never does."""
+    return capacity is not None and capacity >= CAPACITY_MIN
+
+
 def _ledger_admitted(pair: list[str]) -> list[dict]:
     """Admitted rounds on record that are COMMENSURABLE with the current
     protocol: same master pair, same corpus size (rows predating the
@@ -79,8 +85,7 @@ def _ledger_admitted(pair: list[str]) -> list[dict]:
             continue
         if r.get("scale_docs", 40000) != SCALE_DOCS:
             continue
-        cap = r.get("capacity")
-        if cap is not None and cap >= CAPACITY_MIN:
+        if _admitted(r.get("capacity")):
             out.append(r)
     return out
 
@@ -302,7 +307,7 @@ def main() -> None:
                 row["efficiency"] = round(
                     (row[hi]["docs_per_sec"] / row[lo]["docs_per_sec"])
                     / ratio, 3)
-                row["admitted"] = row["capacity"] >= CAPACITY_MIN
+                row["admitted"] = _admitted(row["capacity"])
                 if row["admitted"]:
                     admitted.append(row["efficiency"])
             scaling["rounds"].append(row)
@@ -509,7 +514,7 @@ def _write_bench_md(result: dict) -> None:
                 and r.get("scale_docs", 40000) == SCALE_DOCS]
         meas = [r for r in rows if "efficiency" in r]
         adm = sorted(r["efficiency"] for r in meas
-                     if r.get("capacity", 0) >= CAPACITY_MIN)
+                     if _admitted(r.get("capacity")))
         if adm:
             import statistics
             lines += [

@@ -13,13 +13,12 @@ their page payload; outlines are drawn with numpy slice assignments
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from ._rows import map_rows
 
 LEVEL_GREY = {"BLOCK": 0, "PARA": 64, "TEXTLINE": 96, "WORD": 128}
 
@@ -57,25 +56,15 @@ def annotate_pages(hierarchy: DataFrame, media: DataFrame,
              .agg(F.collect_list(
                  F.struct("level", "left", "top", "right", "bottom"))
                  .alias("boxes")))
-    rows = media.join(boxes, "media_ref")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {f.name: [] for f in ANNOTATED_SCHEMA}
-            for r in pdf.itertuples(index=False):
-                img = np.frombuffer(r.payload, dtype=np.uint8).copy()
-                shape = ((r.height, r.width) if r.bands == 1
-                         else (r.height, r.width, r.bands))
-                img = img.reshape(shape)
-                for bx in r.boxes:
-                    draw_box(img, bx["left"], bx["top"], bx["right"],
-                             bx["bottom"], LEVEL_GREY.get(bx["level"], 0))
-                out["media_ref"].append(r.media_ref)
-                out["width"].append(r.width)
-                out["height"].append(r.height)
-                out["bands"].append(r.bands)
-                out["payload"].append(img.tobytes())
-                out["n_boxes"].append(len(r.boxes))
-            yield pd.DataFrame(out)
+    def per_row(r):
+        shape = ((r.height, r.width) if r.bands == 1
+                 else (r.height, r.width, r.bands))
+        img = np.frombuffer(r.payload, dtype=np.uint8).reshape(shape).copy()
+        for bx in r.boxes:
+            draw_box(img, bx["left"], bx["top"], bx["right"], bx["bottom"],
+                     LEVEL_GREY.get(bx["level"], 0))
+        yield (r.media_ref, r.width, r.height, r.bands, img.tobytes(),
+               len(r.boxes))
 
-    return rows.mapInPandas(run, ANNOTATED_SCHEMA)
+    return map_rows(media.join(boxes, "media_ref"), ANNOTATED_SCHEMA, per_row)

@@ -3,8 +3,9 @@
 Spark-first rebuild of the reference's analyze/recognize flows
 (ImageAnalyzerFactory.analyzeLayout:472-488 / recognize:491-507, both
 delegating to the native engine): the per-page kernel is the same numpy
-code the oracle runs (oracle.analyze_page), executed as a vectorized
-`mapInPandas` stage over Arrow batches; everything around it — explode,
+code the oracle runs (oracle.analyze_page), run per page inside one
+`mapInPandas` stage over Arrow batches (operators._rows.map_rows, which
+also owns the on_error policy); everything around it — explode,
 join, skew defusal, ordering, assembly — is declarative DataFrame API so
 Catalyst plans it (predicate pushdown, AQE shuffle sizing, broadcast
 selection).
@@ -30,12 +31,13 @@ Scale design (SURVEY sections 3.4 / 4.3):
 from __future__ import annotations
 
 import time
-from typing import Iterator
+from operator import itemgetter
 
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from ._rows import map_rows
 
 SPAN_SCHEMA = T.StructType([
     T.StructField("doc_id", T.StringType(), False),
@@ -190,52 +192,26 @@ def _ocr_stage(rows: DataFrame, psm: str, salt_partitions: int | None,
                page_timeout_ms: int | None = None) -> DataFrame:
     """Image-span rows (with payload) -> block-level sub-spans.
 
-    on_error: 'fail' raises (strict, the reference's TesseractException
-    behavior); 'dead-letter' emits one in-band span (kind='error',
-    text=<reason>) for an undecodable/unanalyzable page so one corrupt
-    blob cannot kill a 10^12-doc job and the failure stays visible,
-    countable, and deterministic — no side channel. page_timeout_ms is
-    the per-page budget (see _page_deadline)."""
-    if on_error not in ("fail", "dead-letter"):
-        raise ValueError(f"on_error must be 'fail' or 'dead-letter', "
-                         f"got {on_error!r}")
+    on_error: 'fail' | 'dead-letter' (policy semantics: operators._rows).
+    A dead-lettered page becomes one in-band span (kind='error',
+    text=<reason>) so one corrupt blob cannot kill a 10^12-doc job.
+    page_timeout_ms is the per-page budget (see _page_deadline)."""
     if salt_partitions:
         rows = rows.repartition(salt_partitions, "doc_id", "offset")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def per_row(r):
         from ..oracle.page import analyze_page, decode_payload
-        from ..oracle.segment import TEXT_KINDS
-        deadline = _page_deadline(page_timeout_ms)
-        for pdf in batches:
-            out: dict[str, list] = {f.name: [] for f in SPAN_SCHEMA}
-            for r in pdf.itertuples(index=False):
-                try:
-                    with deadline():
-                        img = decode_payload(r.payload, r.width, r.height,
-                                             r.bands)
-                        res = analyze_page(img, psm=psm, langs=langs)
-                except Exception as e:   # noqa: BLE001 — policy boundary
-                    if on_error == "fail":
-                        raise
-                    out["doc_id"].append(r.doc_id)
-                    out["offset"].append(r.offset)
-                    out["sub"].append(0)
-                    out["kind"].append("error")
-                    out["text"].append(f"{type(e).__name__}: {e}"[:200])
-                    out["media_ref"].append(r.media_ref)
-                    continue
-                for i, blk in enumerate(res.blocks):
-                    is_text = blk.block_type in TEXT_KINDS
-                    out["doc_id"].append(r.doc_id)
-                    out["offset"].append(r.offset)
-                    out["sub"].append(i)
-                    out["kind"].append("text" if is_text else "image")
-                    out["text"].append(blk.text if is_text else None)
-                    out["media_ref"].append(
-                        r.media_ref if is_text else f"{r.media_ref}#b{i}")
-            yield pd.DataFrame(out)
+        with _page_deadline(page_timeout_ms)():
+            img = decode_payload(r.payload, r.width, r.height, r.bands)
+            res = analyze_page(img, psm=psm, langs=langs)
+        for i, (kind, text, ref) in enumerate(res.block_spans(r.media_ref)):
+            yield r.doc_id, r.offset, i, kind, text, ref
 
-    return rows.mapInPandas(run, SPAN_SCHEMA)
+    def error_rows(r, e):
+        yield (r.doc_id, r.offset, 0, "error",
+               f"{type(e).__name__}: {e}"[:200], r.media_ref)
+
+    return map_rows(rows, SPAN_SCHEMA, per_row, on_error, error_rows)
 
 
 def audit_dangling_media(documents: DataFrame,
@@ -263,7 +239,7 @@ def extract_spans(documents: DataFrame, media: DataFrame, *,
     """Flagship query: (documents, media) -> ordered span table
     (doc_id, seq, kind, text, media_ref) — the invariant's exact shape
     (FIXTURES.md section 4 / BASELINE.json input_hint). on_error:
-    'fail' | 'dead-letter' (see _ocr_stage). `languages` is the init
+    'fail' | 'dead-letter' (see operators._rows). `languages` is the init
     spec '[~]lang[+[~]lang]*' (TesseractHandle.init:399-459): the
     resolved pack load order feeds recognition templates, so the spec
     changes recognized text, not just config state. page_timeout_ms is
@@ -301,24 +277,15 @@ def page_osd(documents: DataFrame, media: DataFrame, *,
     AUTO_OSD): one row per page with the rotation-confidence argmax OSD
     verdict. Same partitioning as the OCR stage (per-page rows; payloads
     never shuffle)."""
-    rows = _joined_images(documents, media, broadcast_media)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def per_row(r):
         from ..oracle.page import decode_payload, detect_page_osd
-        for pdf in batches:
-            out: dict[str, list] = {f.name: [] for f in OSD_SCHEMA}
-            for r in pdf.itertuples(index=False):
-                img = decode_payload(r.payload, r.width, r.height, r.bands)
-                osd = detect_page_osd(img)
-                out["doc_id"].append(r.doc_id)
-                out["media_ref"].append(r.media_ref)
-                out["orientation"].append(osd["orientation"])
-                out["rotation_degrees"].append(osd["rotation_degrees"])
-                out["osd_confidence"].append(osd["osd_confidence"])
-                out["script"].append(osd["script"])
-            yield pd.DataFrame(out)
+        osd = detect_page_osd(
+            decode_payload(r.payload, r.width, r.height, r.bands))
+        yield (r.doc_id, r.media_ref, osd["orientation"],
+               osd["rotation_degrees"], osd["osd_confidence"], osd["script"])
 
-    return rows.mapInPandas(run, OSD_SCHEMA)
+    return map_rows(_joined_images(documents, media, broadcast_media),
+                    OSD_SCHEMA, per_row)
 
 
 def analyze_documents(documents: DataFrame, media: DataFrame, *,
@@ -342,46 +309,18 @@ def analyze_documents(documents: DataFrame, media: DataFrame, *,
     if salt_partitions:
         rows = rows.repartition(salt_partitions, "doc_id", "offset")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..oracle.page import analyze_page, decode_payload, resolve_ppi
-        for pdf in batches:
-            frames = []
-            for r in pdf.itertuples(index=False):
-                img = decode_payload(r.payload, r.width, r.height, r.bands)
-                # S5 resolution chain: embedded metadata > dpi column >
-                # screen default (ImageIOHelper.readImageData:379-407);
-                # feeds font_pointsize (points = px * 72 / ppi)
-                ppi = resolve_ppi(r.payload, getattr(r, "dpi", None))
-                res = analyze_page(img, psm=psm, recognize=recognize,
-                                   whitelist=whitelist, roi=roi,
-                                   langs=langs, ppi=ppi)
-                rws = res.rows()
-                if not rws:
-                    continue
-                f = pd.DataFrame(rws)
-                f.insert(0, "doc_id", r.doc_id)
-                f.insert(1, "media_ref", r.media_ref)
-                f.insert(2, "offset", r.offset)
-                for c in ("baseline_x1", "baseline_y1",
-                          "baseline_x2", "baseline_y2"):
-                    f[c] = f[c].astype("Int32")
-                for c in ("font_pointsize", "font_id"):
-                    f[c] = f[c].astype("Int32")
-                for c in ("font_bold", "font_italic", "font_underlined",
-                          "font_monospace", "font_serif", "font_smallcaps",
-                          "is_dictionary_word", "is_numeric_word",
-                          "is_subscript", "is_superscript", "is_dropcap"):
-                    f[c] = f[c].astype("boolean")
-                frames.append(f)
-            if frames:
-                import warnings
-                with warnings.catch_warnings():
-                    # pandas deprecates letting all-NA object columns
-                    # (e.g. a page whose every node lacks text) vote on
-                    # the concat result dtype; either behavior is fine
-                    # here because Arrow casts to HIERARCHY_SCHEMA below
-                    warnings.simplefilter("ignore", FutureWarning)
-                    cat = pd.concat(frames, ignore_index=True)
-                yield cat[[f.name for f in HIERARCHY_SCHEMA]]
+    node_fields = itemgetter(*HIERARCHY_SCHEMA.fieldNames()[3:])
 
-    return rows.mapInPandas(run, HIERARCHY_SCHEMA)
+    def per_row(r):
+        from ..oracle.page import analyze_page, decode_payload, resolve_ppi
+        img = decode_payload(r.payload, r.width, r.height, r.bands)
+        # S5 resolution chain: embedded metadata > dpi column > screen
+        # default (ImageIOHelper.readImageData:379-407); feeds
+        # font_pointsize (points = px * 72 / ppi)
+        ppi = resolve_ppi(r.payload, getattr(r, "dpi", None))
+        res = analyze_page(img, psm=psm, recognize=recognize,
+                           whitelist=whitelist, roi=roi, langs=langs, ppi=ppi)
+        for node in res.rows():
+            yield (r.doc_id, r.media_ref, r.offset) + node_fields(node)
+
+    return map_rows(rows, HIERARCHY_SCHEMA, per_row)

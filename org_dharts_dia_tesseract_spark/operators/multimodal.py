@@ -16,13 +16,15 @@ PDF parse as a main-content-extraction tier. The Spark-side plumbing
 (schema, batching, partitioning) is identical across all paths and
 fully tested.
 
-All operators are `mapInPandas` stages over Arrow batches; nothing is
-per-row Python.
+Each operator is one `mapInPandas` stage over Arrow batches, but the
+decode and feature work inside it is per-row Python over numpy kernels:
+operators._rows.map_rows walks the rows and owns the on_error policy
+('fail' | 'drop' here).
 """
 
 from __future__ import annotations
 
-from typing import Iterator
+from operator import itemgetter
 
 import numpy as np
 import pandas as pd
@@ -31,6 +33,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..codecs_img import DECODERS, ENCODERS, sniff_codec
+from ._rows import map_rows
 
 SUPPORTED_RAW = "raw"   # row-major uint8, length == width*height*bands
 CODECS_REAL = ("bmp", "pnm", "tiff", "png", "gif", "jpeg", "jp2", "pdf")
@@ -64,22 +67,13 @@ def colorize_media(media: DataFrame) -> DataFrame:
     colorize_page): raw 1-band payloads become raw 3-band RGB rows with
     real chroma content — the input surface for the color codec paths
     (e.g. the 4:2:0 color-JPEG gate). mapInPandas per Arrow batch."""
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def per_row(r):
         from ..datagen import colorize_page
-        for pdf in batches:
-            out = {f.name: [] for f in RESIZE_SCHEMA}
-            for r in pdf.itertuples(index=False):
-                img = decode(r.payload, r.width, r.height, r.bands)
-                rgb = colorize_page(img)
-                out["media_ref"].append(r.media_ref)
-                out["width"].append(r.width)
-                out["height"].append(r.height)
-                out["bands"].append(3)
-                out["payload"].append(rgb.tobytes())
-            yield pd.DataFrame(out)
+        rgb = colorize_page(decode(r.payload, r.width, r.height, r.bands))
+        yield r.media_ref, r.width, r.height, 3, rgb.tobytes()
 
-    return media.select("media_ref", "width", "height", "bands",
-                        "payload").mapInPandas(run, RESIZE_SCHEMA)
+    return map_rows(media.select("media_ref", "width", "height", "bands",
+                                 "payload"), RESIZE_SCHEMA, per_row)
 
 
 def reencode_media(media: DataFrame, codec: str,
@@ -122,37 +116,28 @@ def reencode_media(media: DataFrame, codec: str,
             raise ValueError(f"{flag} applies to codec {owner!r}, "
                              f"not {codec!r}")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {f.name: [] for f in RESIZE_SCHEMA}
-            for r in pdf.itertuples(index=False):
-                img = decode(r.payload, r.width, r.height, r.bands)
-                if codec == "tiff":
-                    enc = ENCODERS["tiff"](img, packbits, compression,
-                                           dpi=dpi, bits=tiff_bits)
-                elif codec == "jpeg":
-                    enc = ENCODERS["jpeg"](img, dpi=dpi,
-                                           subsampling=jpeg_subsampling,
-                                           progressive=jpeg_progressive)
-                elif codec == "png" and (png_palette or png_interlace):
-                    enc = ENCODERS["png"](img, dpi=dpi,
-                                          palette=png_palette,
-                                          interlace=png_interlace)
-                elif codec == "pdf" and pdf_ccitt:
-                    enc = ENCODERS["pdf"](img, ccitt=True)
-                elif dpi:
-                    enc = ENCODERS[codec](img, dpi=dpi)
-                else:
-                    enc = ENCODERS[codec](img)
-                out["media_ref"].append(r.media_ref)
-                out["width"].append(r.width)
-                out["height"].append(r.height)
-                out["bands"].append(r.bands)
-                out["payload"].append(enc)
-            yield pd.DataFrame(out)
+    def per_row(r):
+        img = decode(r.payload, r.width, r.height, r.bands)
+        if codec == "tiff":
+            enc = ENCODERS["tiff"](img, packbits, compression,
+                                   dpi=dpi, bits=tiff_bits)
+        elif codec == "jpeg":
+            enc = ENCODERS["jpeg"](img, dpi=dpi,
+                                   subsampling=jpeg_subsampling,
+                                   progressive=jpeg_progressive)
+        elif codec == "png" and (png_palette or png_interlace):
+            enc = ENCODERS["png"](img, dpi=dpi, palette=png_palette,
+                                  interlace=png_interlace)
+        elif codec == "pdf" and pdf_ccitt:
+            enc = ENCODERS["pdf"](img, ccitt=True)
+        elif dpi:
+            enc = ENCODERS[codec](img, dpi=dpi)
+        else:
+            enc = ENCODERS[codec](img)
+        yield r.media_ref, r.width, r.height, r.bands, enc
 
-    return media.select("media_ref", "width", "height", "bands",
-                        "payload").mapInPandas(run, RESIZE_SCHEMA)
+    return map_rows(media.select("media_ref", "width", "height", "bands",
+                                 "payload"), RESIZE_SCHEMA, per_row)
 
 
 FEATURES_SCHEMA = T.StructType([
@@ -171,26 +156,17 @@ def extract_features(media: DataFrame) -> DataFrame:
     """Per-image features (decode -> binarize -> CC count) with the DPI
     fallback of S5 (ImageIOHelper.readImageData:379-407: missing metadata
     -> default resolution)."""
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def per_row(r):
         from ..oracle.binarize import otsu_binarize, to_grey
         from ..oracle.cc import connected_components
-        for pdf in batches:
-            out = {f.name: [] for f in FEATURES_SCHEMA}
-            for r in pdf.itertuples(index=False):
-                img = decode(r.payload, r.width, r.height, r.bands)
-                grey = to_grey(img)
-                ink = otsu_binarize(grey)
-                out["media_ref"].append(r.media_ref)
-                out["width"].append(r.width)
-                out["height"].append(r.height)
-                out["dpi"].append(int(r.dpi) if pd.notna(r.dpi) else DEFAULT_DPI)
-                out["ink_ratio"].append(float(ink.mean()))
-                out["mean_luma"].append(float(grey.mean()))
-                out["row_profile_var"].append(float(np.var(ink.sum(axis=1))))
-                out["n_components"].append(len(connected_components(ink)))
-            yield pd.DataFrame(out)
+        grey = to_grey(decode(r.payload, r.width, r.height, r.bands))
+        ink = otsu_binarize(grey)
+        yield (r.media_ref, r.width, r.height,
+               int(r.dpi) if pd.notna(r.dpi) else DEFAULT_DPI,
+               float(ink.mean()), float(grey.mean()),
+               float(np.var(ink.sum(axis=1))), len(connected_components(ink)))
 
-    return media.mapInPandas(run, FEATURES_SCHEMA)
+    return map_rows(media, FEATURES_SCHEMA, per_row)
 
 
 RESIZE_SCHEMA = T.StructType([
@@ -204,22 +180,13 @@ RESIZE_SCHEMA = T.StructType([
 
 def resize(media: DataFrame, out_w: int, out_h: int) -> DataFrame:
     """Nearest-neighbor resize (pure numpy fancy indexing — vectorized)."""
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {f.name: [] for f in RESIZE_SCHEMA}
-            for r in pdf.itertuples(index=False):
-                img = decode(r.payload, r.width, r.height, r.bands)
-                ys = (np.arange(out_h) * r.height // out_h)
-                xs = (np.arange(out_w) * r.width // out_w)
-                res = img[np.ix_(ys, xs)] if r.bands == 1 else img[np.ix_(ys, xs)]
-                out["media_ref"].append(r.media_ref)
-                out["width"].append(out_w)
-                out["height"].append(out_h)
-                out["bands"].append(r.bands)
-                out["payload"].append(res.tobytes())
-            yield pd.DataFrame(out)
+    def per_row(r):
+        img = decode(r.payload, r.width, r.height, r.bands)
+        ys = np.arange(out_h) * r.height // out_h
+        xs = np.arange(out_w) * r.width // out_w
+        yield r.media_ref, out_w, out_h, r.bands, img[np.ix_(ys, xs)].tobytes()
 
-    return media.mapInPandas(run, RESIZE_SCHEMA)
+    return map_rows(media, RESIZE_SCHEMA, per_row)
 
 
 def split_tiff_pages(media: DataFrame) -> DataFrame:
@@ -228,36 +195,22 @@ def split_tiff_pages(media: DataFrame) -> DataFrame:
     multi-page TIFF explode into one row per page (media_ref gains a
     '#p<i>' suffix, payload becomes the page's raw raster); every other
     row passes through unchanged. mapInPandas, 1:N within the batch."""
-    from ..codecs_img import decode_tiff_pages, sniff_codec
+    def per_row(r):
+        from ..codecs_img import decode_tiff_pages
+        pay = bytes(r.payload)
+        if (len(pay) != r.width * r.height * r.bands
+                and sniff_codec(pay[:8]) == "tiff"):
+            pages = decode_tiff_pages(pay)
+            if len(pages) > 1:
+                for i, img in enumerate(pages):
+                    h, w = img.shape[:2]
+                    b = 1 if img.ndim == 2 else img.shape[2]
+                    yield f"{r.media_ref}#p{i}", w, h, b, img.tobytes()
+                return
+        yield r.media_ref, r.width, r.height, r.bands, r.payload
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {f.name: [] for f in RESIZE_SCHEMA}
-
-            def emit(ref, w, h, b, payload):
-                out["media_ref"].append(ref)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["bands"].append(b)
-                out["payload"].append(payload)
-
-            for r in pdf.itertuples(index=False):
-                pay = bytes(r.payload)
-                if (len(pay) != r.width * r.height * r.bands
-                        and sniff_codec(pay[:8]) == "tiff"):
-                    pages = decode_tiff_pages(pay)
-                    if len(pages) > 1:
-                        for i, img in enumerate(pages):
-                            h, w = img.shape[:2]
-                            b = 1 if img.ndim == 2 else img.shape[2]
-                            emit(f"{r.media_ref}#p{i}", w, h, b,
-                                 img.tobytes())
-                        continue
-                emit(r.media_ref, r.width, r.height, r.bands, r.payload)
-            yield pd.DataFrame(out)
-
-    return media.select("media_ref", "width", "height", "bands",
-                        "payload").mapInPandas(run, RESIZE_SCHEMA)
+    return map_rows(media.select("media_ref", "width", "height", "bands",
+                                 "payload"), RESIZE_SCHEMA, per_row)
 
 
 def frame_sample(documents: DataFrame, media: DataFrame,
@@ -293,24 +246,8 @@ VIDEO_FEATURES_SCHEMA = T.StructType([
 #: Observation from the most recent 'drop'-policy feature plan (per
 #: driver process): after an action, `.get` exposes {'dropped_payloads'}
 #: — the logged evidence of how many corrupt clips the job skipped.
+#: Set by operators._rows, which owns the 'drop' policy.
 last_decode_error_observation = None
-
-
-def _with_drop_observation(df: DataFrame) -> DataFrame:
-    """Attach a dropped-payload counter to a feature stage that emits
-    `__err` marker rows (1 per undecodable payload), then filter the
-    markers out. The count survives in
-    `last_decode_error_observation.get` after any action — corrupt
-    clips at 10^12 rows are a data-quality fact to surface, not an
-    exception to die on (same policy as extract's dead-letter spans and
-    the LSH cap's dropped-bucket observation)."""
-    from pyspark.sql import Observation
-    global last_decode_error_observation
-    obs = Observation()
-    observed = df.observe(
-        obs, F.sum(F.col("__err")).alias("dropped_payloads"))
-    last_decode_error_observation = obs
-    return observed.where(F.col("__err") == 0).drop("__err")
 
 
 def video_frame_features(video: DataFrame, every_k: int = 1,
@@ -328,41 +265,17 @@ def video_frame_features(video: DataFrame, every_k: int = 1,
     on_error: 'fail' raises on an undecodable payload (strict,
     default); 'drop' skips it and counts it in
     `last_decode_error_observation` — one corrupt clip must not kill a
-    10^12-row job, and the skip count stays visible."""
-    if on_error not in ("fail", "drop"):
-        raise ValueError(f"on_error must be 'fail' or 'drop', "
-                         f"got {on_error!r}")
-    schema = VIDEO_FEATURES_SCHEMA
-    if on_error == "drop":
-        schema = T.StructType(
-            list(VIDEO_FEATURES_SCHEMA)
-            + [T.StructField("__err", T.IntegerType(), False)])
+    10^12-row job, and the skip count stays visible (policy semantics:
+    operators._rows)."""
+    fields = itemgetter(*VIDEO_FEATURES_SCHEMA.fieldNames()[1:])
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def per_row(r):
         from ..codecs_avi import avi_frame_features
-        for pdf in batches:
-            out = {f.name: [] for f in schema}
-            for r in pdf.itertuples(index=False):
-                try:
-                    feats_rows = avi_frame_features(r.payload, every_k)
-                except Exception:   # noqa: BLE001 — policy boundary
-                    if on_error == "fail":
-                        raise
-                    out["video_ref"].append(r.video_ref)
-                    for f in VIDEO_FEATURES_SCHEMA[1:]:
-                        out[f.name].append(0)
-                    out["__err"].append(1)
-                    continue
-                for feats in feats_rows:
-                    out["video_ref"].append(r.video_ref)
-                    for k, v in feats.items():
-                        out[k].append(v)
-                    if on_error == "drop":
-                        out["__err"].append(0)
-            yield pd.DataFrame(out)
+        for feats in avi_frame_features(r.payload, every_k):
+            yield (r.video_ref,) + fields(feats)
 
-    feats = video.select("video_ref", "payload").mapInPandas(run, schema)
-    return _with_drop_observation(feats) if on_error == "drop" else feats
+    return map_rows(video.select("video_ref", "payload"),
+                    VIDEO_FEATURES_SCHEMA, per_row, on_error)
 
 
 def split_video_frames(media: DataFrame, every_k: int = 1) -> DataFrame:
@@ -374,33 +287,19 @@ def split_video_frames(media: DataFrame, every_k: int = 1) -> DataFrame:
     if every_k < 1:       # fail on the driver, not deep in an executor
         raise ValueError("every_k must be >= 1")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def per_row(r):
         from ..codecs_avi import decode_avi_mjpeg
-        for pdf in batches:
-            out = {f.name: [] for f in RESIZE_SCHEMA}
+        pay = bytes(r.payload)
+        if pay[:4] == b"RIFF" and pay[8:12] == b"AVI ":
+            frames, w, h, _fps = decode_avi_mjpeg(pay)
+            for i, img in enumerate(frames[::every_k]):
+                b = 1 if img.ndim == 2 else img.shape[2]
+                yield f"{r.media_ref}#f{i * every_k}", w, h, b, img.tobytes()
+            return
+        yield r.media_ref, r.width, r.height, r.bands, r.payload
 
-            def emit(ref, w, h, b, payload):
-                out["media_ref"].append(ref)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["bands"].append(b)
-                out["payload"].append(payload)
-
-            for r in pdf.itertuples(index=False):
-                pay = bytes(r.payload)
-                if pay[:4] == b"RIFF" and pay[8:12] == b"AVI ":
-                    frames, w, h, _fps = decode_avi_mjpeg(pay)
-                    for i, img in enumerate(frames):
-                        if i % every_k:
-                            continue
-                        b = 1 if img.ndim == 2 else img.shape[2]
-                        emit(f"{r.media_ref}#f{i}", w, h, b, img.tobytes())
-                    continue
-                emit(r.media_ref, r.width, r.height, r.bands, r.payload)
-            yield pd.DataFrame(out)
-
-    return media.select("media_ref", "width", "height", "bands",
-                        "payload").mapInPandas(run, RESIZE_SCHEMA)
+    return map_rows(media.select("media_ref", "width", "height", "bands",
+                                 "payload"), RESIZE_SCHEMA, per_row)
 
 
 AUDIO_FEATURES_SCHEMA = T.StructType([
@@ -426,36 +325,11 @@ def audio_features(audio: DataFrame, on_error: str = "fail") -> DataFrame:
     on_error: 'fail' raises on an undecodable payload (strict,
     default); 'drop' skips it and counts it in
     `last_decode_error_observation` (see video_frame_features)."""
-    if on_error not in ("fail", "drop"):
-        raise ValueError(f"on_error must be 'fail' or 'drop', "
-                         f"got {on_error!r}")
-    schema = AUDIO_FEATURES_SCHEMA
-    if on_error == "drop":
-        schema = T.StructType(
-            list(AUDIO_FEATURES_SCHEMA)
-            + [T.StructField("__err", T.IntegerType(), False)])
+    fields = itemgetter(*AUDIO_FEATURES_SCHEMA.fieldNames()[1:])
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def per_row(r):
         from ..codecs_wav import wav_features
-        for pdf in batches:
-            out = {f.name: [] for f in schema}
-            for r in pdf.itertuples(index=False):
-                try:
-                    feats = wav_features(r.payload)
-                except Exception:   # noqa: BLE001 — policy boundary
-                    if on_error == "fail":
-                        raise
-                    out["audio_ref"].append(r.audio_ref)
-                    for f in AUDIO_FEATURES_SCHEMA[1:]:
-                        out[f.name].append(0)
-                    out["__err"].append(1)
-                    continue
-                out["audio_ref"].append(r.audio_ref)
-                for k, v in feats.items():
-                    out[k].append(v)
-                if on_error == "drop":
-                    out["__err"].append(0)
-            yield pd.DataFrame(out)
+        yield (r.audio_ref,) + fields(wav_features(r.payload))
 
-    feats = audio.select("audio_ref", "payload").mapInPandas(run, schema)
-    return _with_drop_observation(feats) if on_error == "drop" else feats
+    return map_rows(audio.select("audio_ref", "payload"),
+                    AUDIO_FEATURES_SCHEMA, per_row, on_error)

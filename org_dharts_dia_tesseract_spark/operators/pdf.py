@@ -15,11 +15,10 @@ input split.
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
+
+from ._rows import map_rows
 
 PDF_DOC_SCHEMA = T.StructType([
     T.StructField("doc_id", T.StringType(), False),
@@ -45,33 +44,20 @@ def _text_lines(spans) -> list[str]:
 def docs_to_pdf(docs: DataFrame) -> DataFrame:
     """Sink: render each interleaved document's text layer as a
     single-page Tj-stream PDF blob (one row per doc)."""
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def per_row(r):
         from ..codecs_pdf import encode_pdf_text
-        for pdf in batches:
-            out = {"doc_id": [], "n_lines": [], "pdf": []}
-            for r in pdf.itertuples(index=False):
-                lines = _text_lines(r.spans)
-                out["doc_id"].append(r.doc_id)
-                out["n_lines"].append(len(lines))
-                out["pdf"].append(encode_pdf_text(lines))
-            yield pd.DataFrame(out)
+        lines = _text_lines(r.spans)
+        yield r.doc_id, len(lines), encode_pdf_text(lines)
 
-    return docs.select("doc_id", "spans").mapInPandas(run, PDF_DOC_SCHEMA)
+    return map_rows(docs.select("doc_id", "spans"), PDF_DOC_SCHEMA, per_row)
 
 
 def pdf_extract_text(pdfs: DataFrame, pdf_col: str = "pdf") -> DataFrame:
     """Source: parse the text layer (Tj/TJ show strings) back out of PDF
     payloads — one row per document, lines joined with newlines."""
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def per_row(r):
         from ..codecs_pdf import extract_pdf_text
-        for pdf in batches:
-            out = {"doc_id": [], "n_lines": [], "text": []}
-            for r in pdf.itertuples(index=False):
-                lines = extract_pdf_text(bytes(getattr(r, pdf_col)))
-                out["doc_id"].append(r.doc_id)
-                out["n_lines"].append(len(lines))
-                out["text"].append("\n".join(lines))
-            yield pd.DataFrame(out)
+        lines = extract_pdf_text(bytes(getattr(r, pdf_col)))
+        yield r.doc_id, len(lines), "\n".join(lines)
 
-    return (pdfs.select("doc_id", pdf_col)
-            .mapInPandas(run, PDF_TEXT_SCHEMA))
+    return map_rows(pdfs.select("doc_id", pdf_col), PDF_TEXT_SCHEMA, per_row)

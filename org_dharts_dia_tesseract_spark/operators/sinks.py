@@ -13,8 +13,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-_TEXT_KINDS = ("FLOWING_TEXT", "HEADING_TEXT", "PULLOUT_TEXT", "TABLE",
-               "VERTICAL_TEXT", "CAPTION_TEXT")
+from ..oracle.segment import TEXT_KINDS
+from ._rows import map_rows
 
 
 def _ordered_join(df: DataFrame, keys: list[str], order_col: str,
@@ -31,7 +31,7 @@ def page_text(hierarchy: DataFrame) -> DataFrame:
     """GetUTF8Text (TessAPI.java:483-487): per page, text blocks joined by
     blank lines in reading order."""
     blocks = hierarchy.where((F.col("level") == "BLOCK")
-                             & F.col("block_type").isin(*_TEXT_KINDS)
+                             & F.col("block_type").isin(*sorted(TEXT_KINDS))
                              & F.col("text").isNotNull())
     return _ordered_join(blocks, ["doc_id", "media_ref"], "seq", "text",
                          "\n\n", "page_text")
@@ -207,25 +207,17 @@ def merge_tiff(documents: DataFrame, media: DataFrame,
         T.StructField("tiff", T.BinaryType(), False),
     ])
 
-    def run(batches):
-        import pandas as pd
-        for pdf in batches:
-            out = {"doc_id": [], "n_pages": [], "tiff": []}
-            for r in pdf.itertuples(index=False):
-                if len(r.pages) > max_pages:   # typed executor-side guard
-                    raise InvalidParameterError(
-                        f"merge_tiff: document {r.doc_id} has "
-                        f"{len(r.pages)} pages > max_pages={max_pages}",
-                        {"doc_id": r.doc_id, "n_pages": len(r.pages)})
-                imgs = [decode_payload(p["payload"], p["width"],
-                                       p["height"], p["bands"])
-                        for p in r.pages]
-                out["doc_id"].append(r.doc_id)
-                out["n_pages"].append(len(imgs))
-                out["tiff"].append(encode_tiff_multipage(imgs, packbits))
-            yield pd.DataFrame(out)
+    def per_row(r):
+        if len(r.pages) > max_pages:   # typed executor-side guard
+            raise InvalidParameterError(
+                f"merge_tiff: document {r.doc_id} has "
+                f"{len(r.pages)} pages > max_pages={max_pages}",
+                {"doc_id": r.doc_id, "n_pages": len(r.pages)})
+        imgs = [decode_payload(p["payload"], p["width"], p["height"],
+                               p["bands"]) for p in r.pages]
+        yield r.doc_id, len(imgs), encode_tiff_multipage(imgs, packbits)
 
-    return merged.mapInPandas(run, schema)
+    return map_rows(merged, schema, per_row)
 
 
 def page_items(hierarchy: DataFrame) -> DataFrame:

@@ -104,18 +104,16 @@ class PageResult:
             visit(b, {"BLOCK": bi})
         return out
 
-    def block_spans(self) -> list[dict]:
-        """Reading-ordered block-level spans: the page's contribution to
-        the document span sequence. Text blocks -> kind='text' with rolled
-        up text; image/line blocks -> kind='image' (PolyBlockType.isText /
-        isImage split, PublicTypes.java:178-192)."""
-        spans = []
-        for i, b in enumerate(self.blocks):
-            if b.block_type in TEXT_KINDS:
-                spans.append({"kind": "text", "text": b.text, "block_idx": i})
-            else:
-                spans.append({"kind": "image", "text": None, "block_idx": i})
-        return spans
+    def block_spans(self, media_ref: str) -> list[tuple]:
+        """Reading-ordered block-level (kind, text, media_ref) spans of
+        the page stored at `media_ref`: its contribution to the document
+        span sequence. Text blocks -> kind='text' with rolled-up text;
+        image/line blocks -> kind='image' with media_ref
+        '<media_ref>#b<block_idx>' so provenance survives
+        (PolyBlockType.isText / isImage split, PublicTypes.java:178-192)."""
+        return [("text", b.text, media_ref) if b.block_type in TEXT_KINDS
+                else ("image", None, f"{media_ref}#b{i}")
+                for i, b in enumerate(self.blocks)]
 
     def page_text(self) -> str:
         """GetUTF8Text analog (TessAPI.java:483-487): text blocks joined by
@@ -302,8 +300,8 @@ def document_spans(doc: dict, media_lookup, psm: str = "AUTO",
 
     media_lookup: media_ref -> media row dict (payload/width/height/bands).
     Output rows: {doc_id, seq, kind, text, media_ref} — seq dense 0..n-1 in
-    (offset, within-page reading order). Sub-image spans carry
-    media_ref = '<ref>#b<block_idx>' so provenance survives.
+    (offset, within-page reading order); page spans come from
+    PageResult.block_spans.
     """
     out = []
     spans = sorted(doc["spans"], key=lambda s: s["offset"])
@@ -314,13 +312,8 @@ def document_spans(doc: dict, media_lookup, psm: str = "AUTO",
             m = media_lookup(s["media_ref"])
             img = decode_payload(m["payload"], m["width"], m["height"], m["bands"])
             res = analyze_page(img, psm=psm, langs=langs)
-            for bs in res.block_spans():
-                if bs["kind"] == "text":
-                    out.append({"kind": "text", "text": bs["text"],
-                                "media_ref": s["media_ref"]})
-                else:
-                    out.append({"kind": "image", "text": None,
-                                "media_ref": f"{s['media_ref']}#b{bs['block_idx']}"})
+            out += [{"kind": k, "text": t, "media_ref": ref}
+                    for k, t, ref in res.block_spans(s["media_ref"])]
     for i, r in enumerate(out):
         r["doc_id"] = doc["doc_id"]
         r["seq"] = i

@@ -72,6 +72,17 @@ class TestBloomBuild:
         with pytest.raises(ValueError):
             bloom_filter_novel(corpus, b"\x00" * 10, m_bits=M)
 
+    def test_rejects_m_bits_past_int_range(self, spark):
+        """Positions are cast to int: m_bits above 2**31 would wrap to
+        negative bit positions, so it is refused; 2**31 itself fits."""
+        with pytest.raises(ValueError, match="2\\*\\*31"):
+            bloom_hash_positions(F.col("text"), (1 << 31) + 8)
+        df = spark.createDataFrame([(f"doc {i}",) for i in range(64)],
+                                   "text string")
+        pos = df.select(*bloom_hash_positions(F.col("text"), 1 << 31)) \
+            .collect()
+        assert all(0 <= p < 1 << 31 for row in pos for p in row)
+
 
 class TestBloomPlan:
     def test_filter_side_no_join_no_exchange(self, spark, corpus):

@@ -4,6 +4,8 @@ independence, per-stratum rate isolation, and validation."""
 
 from __future__ import annotations
 
+import hashlib
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -42,6 +44,22 @@ class TestHashSample:
         assert a != b
         # independent draws overlap near rate^2, not near rate
         assert len(a & b) < len(a) * 0.6
+
+    def test_salt_separator_rejected_existing_salts_unchanged(
+            self, spark, corpus):
+        """'<salt>:<id>' is unescaped, so a ':' in the salt could alias
+        another (salt, id) pair; such salts are refused, and the salts in
+        use keep their md5('<salt>:<id>') draws."""
+        for bad in ("a:b", ":", "train:"):
+            with pytest.raises(ValueError, match="salt"):
+                hash_uniform(F.col("doc_id"), bad)
+        for salt in ("", "mix", "train", "val"):
+            got = (corpus.where(F.col("doc_id") < 5)
+                   .select("doc_id", hash_uniform(F.col("doc_id"), salt)
+                           .alias("u")).collect())
+            for r in got:
+                h = hashlib.md5(f"{salt}:{r['doc_id']}".encode()).hexdigest()
+                assert r["u"] == int(h[:8], 16) / 2.0 ** 32
 
     def test_rate_bounds(self, spark, corpus):
         assert len(_ids(hash_sample(corpus, 0.0))) == 0
