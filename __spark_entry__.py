@@ -21,7 +21,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 _SMOKE_SF_DIR = "/root/testdata/sf0.001"
-_PIPELINE_DOC_CAP = 400   # doc budget for per-query raster pipeline runs
+# doc budgets of the raster gates (scripts/gen_expected.py reads these)
+_PIPELINE_DOC_CAP = 400   # full-pipeline gates
+_MEDIA_DOC_CAP = 200      # re-encoded media, page-level sinks, audio/video
+_ANNOTATED_DOC_CAP = 100  # annotated-raster sink
 
 
 def _interleaved_corpus(spark: SparkSession, sf_dir: str, cap: int):
@@ -79,7 +82,7 @@ def _ocr_annotated_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
     from org_dharts_dia_tesseract_spark.operators import analyze_documents
     from org_dharts_dia_tesseract_spark.operators.annotate import \
         annotate_pages
-    docs, media = _interleaved_corpus(spark, sf_dir, 100)
+    docs, media = _interleaved_corpus(spark, sf_dir, _ANNOTATED_DOC_CAP)
     h = analyze_documents(docs, media)
     return annotate_pages(h, media).select("media_ref", "width", "height",
                                            "n_boxes")
@@ -109,7 +112,7 @@ def _ocr_dpi_font_attrs(spark: SparkSession, sf_dir: str) -> DataFrame:
         reencode_media
     from org_dharts_dia_tesseract_spark.operators.windows import \
         level_font_attributes
-    docs, media = _interleaved_corpus(spark, sf_dir, 200)
+    docs, media = _interleaved_corpus(spark, sf_dir, _MEDIA_DOC_CAP)
     h = analyze_documents(docs, reencode_media(media, "tiff", dpi=192))
     return level_font_attributes(h, "TEXTLINE")
 
@@ -127,7 +130,7 @@ def _ocr_page_osd(spark: SparkSession, sf_dir: str) -> DataFrame:
     """4-way page orientation & script detection (PSM OSD_ONLY/AUTO_OSD:
     rotation-confidence argmax, PublicTypes.java:66-71)."""
     from org_dharts_dia_tesseract_spark.operators import page_osd
-    docs, media = _interleaved_corpus(spark, sf_dir, 200)
+    docs, media = _interleaved_corpus(spark, sf_dir, _MEDIA_DOC_CAP)
     return page_osd(docs, media)
 
 
@@ -136,198 +139,94 @@ def _ocr_tiff_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     336-371): per-doc page count + encoded size (blob dropped for the
     row check)."""
     from org_dharts_dia_tesseract_spark.operators.sinks import merge_tiff
-    docs, media = _interleaved_corpus(spark, sf_dir, 200)
+    docs, media = _interleaved_corpus(spark, sf_dir, _MEDIA_DOC_CAP)
     return (merge_tiff(docs, media)
             .select("doc_id", "n_pages",
                     F.length("tiff").alias("tiff_bytes")))
 
 
-def _ocr_spans_bmp_media(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """End-to-end span extraction over BMP-ENCODED media payloads: the
-    pure-numpy codec decode path (ImageIOHelper.java:263-327 analog) under
-    the same pipeline; spans must equal the raw-payload run's (the
-    parquet oracle IS the raw-run expectation)."""
-    from org_dharts_dia_tesseract_spark.operators import extract_spans
-    from org_dharts_dia_tesseract_spark.operators.multimodal import \
-        reencode_media
-    docs, media = _interleaved_corpus(spark, sf_dir, 200)
-    return extract_spans(docs, reencode_media(media, "bmp"))
+# Span-over-media gates: the 200-doc corpus re-encoded with each codec of
+# ImageIOHelper.java:263-327 (plus PDF) runs through extract_spans; spans
+# must equal the raw-payload run's, so every gate's expectation is the
+# 200-doc slice of ocr_extract_spans'. name -> reencode_media kwargs;
+# colorize=True colorizes the grey pages first (datagen.colorize_page).
+_MEDIA_SPAN_GATES: dict[str, dict] = {
+    # uncompressed BMP: the plain pure-numpy decode path
+    "ocr_spans_bmp_media": {"codec": "bmp"},
+    # Adobe DEFLATE (tag 8): the commonest scanned TIFF after none/PackBits
+    "ocr_spans_deflate_media": {"codec": "tiff", "compression": "deflate"},
+    # zlib IDAT + all five scanline filters
+    "ocr_spans_png_media": {"codec": "png"},
+    # real variable-width LZW
+    "ocr_spans_gif_media": {"codec": "gif"},
+    # lossy, but q90 error (<~25 levels) is far inside the >170-level
+    # ink/background binarization margin
+    "ocr_spans_jpeg_media": {"codec": "jpeg"},
+    # MCU-interleaved YCbCr 4:2:0, luma-collapsed on decode (ImageIO's
+    # color JPEG decode, ImageIOHelper.java:270-327)
+    "ocr_spans_jpeg_color_media": {"codec": "jpeg", "colorize": True,
+                                   "jpeg_subsampling": "420"},
+    # progressive SOF2 (T.81 Annex G), the dominant web flavor, codes the
+    # same quantized coefficients as baseline: pixel-identical decode
+    "ocr_spans_jpeg_prog_media": {"codec": "jpeg", "colorize": True,
+                                  "jpeg_subsampling": "420",
+                                  "jpeg_progressive": True},
+    # indexed color through PLTE + Adam7 de-interlace; lossless
+    "ocr_spans_png_palette_media": {"codec": "png", "png_palette": True,
+                                    "png_interlace": True},
+    # 1-bit PackBits, the fax/scan staple: threshold-128 changes pixels,
+    # not spans
+    "ocr_spans_tiff_bilevel_media": {"codec": "tiff",
+                                     "compression": "packbits",
+                                     "tiff_bits": 1},
+    # CCITT G4 (T.6 MMR), THE archival scanned-document encoding; lossless
+    # over the thresholded image
+    "ocr_spans_tiff_g4_media": {"codec": "tiff", "compression": "g4",
+                                "tiff_bits": 1},
+    # G4 over PDF (/CCITTFaxDecode K=-1): the archival form real scanned
+    # PDFs use (~7x smaller than Flate on text pages)
+    "ocr_spans_pdf_g4_media": {"codec": "pdf", "pdf_ccitt": True},
+    # JPEG 2000 (MQ coder + EBCOT + reversible 5/3 wavelet): lossless
+    "ocr_spans_jp2_media": {"codec": "jp2"},
+    # Flate image XObject; the reference REJECTS pdf (ImageIOHelper.java:
+    # 278-282) but the north rule names PDF parse, so here it decodes
+    "ocr_spans_pdf_media": {"codec": "pdf"},
+}
 
 
-def _ocr_spans_deflate_media(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """End-to-end span extraction over DEFLATE-compressed TIFF payloads
-    (Adobe DEFLATE, compression tag 8 — the most common scanned-page
-    TIFF encoding after none/PackBits; zlib strips, codecs_img.py).
-    Spans must equal the raw-payload run's."""
-    from org_dharts_dia_tesseract_spark.operators import extract_spans
-    from org_dharts_dia_tesseract_spark.operators.multimodal import \
-        reencode_media
-    docs, media = _interleaved_corpus(spark, sf_dir, 200)
-    return extract_spans(docs, reencode_media(media, "tiff",
-                                              compression="deflate"))
+def _media_span_gate(codec: str, colorize: bool = False, **reencode_kw):
+    def gate(spark: SparkSession, sf_dir: str) -> DataFrame:
+        from org_dharts_dia_tesseract_spark.operators import extract_spans
+        from org_dharts_dia_tesseract_spark.operators.multimodal import (
+            colorize_media, reencode_media)
+        docs, media = _interleaved_corpus(spark, sf_dir, _MEDIA_DOC_CAP)
+        if colorize:
+            media = colorize_media(media)
+        return extract_spans(docs, reencode_media(media, codec,
+                                                  **reencode_kw))
+    return gate
 
 
-def _ocr_spans_png_media(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """End-to-end span extraction over PNG-encoded media payloads (zlib
-    IDAT + scanline filters, codecs_img.py:decode_png). Spans must equal
-    the raw-payload run's."""
-    from org_dharts_dia_tesseract_spark.operators import extract_spans
-    from org_dharts_dia_tesseract_spark.operators.multimodal import \
-        reencode_media
-    docs, media = _interleaved_corpus(spark, sf_dir, 200)
-    return extract_spans(docs, reencode_media(media, "png"))
+def _query_vectors(emb: DataFrame) -> DataFrame:
+    """The five ANN gate queries: vectors 0-4 as (q_id, q_emb)."""
+    return emb.where(F.col("vec_id") < 5).select(
+        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb"))
 
 
-def _ocr_spans_gif_media(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """End-to-end span extraction over GIF-encoded media payloads (real
-    variable-width LZW, codecs_img.py:decode_gif). Spans must equal the
-    raw-payload run's."""
-    from org_dharts_dia_tesseract_spark.operators import extract_spans
-    from org_dharts_dia_tesseract_spark.operators.multimodal import \
-        reencode_media
-    docs, media = _interleaved_corpus(spark, sf_dir, 200)
-    return extract_spans(docs, reencode_media(media, "gif"))
+def _index_path(prefix: str, sf_dir: str) -> str:
+    """Per-sf persisted-index dir: data/gen/<prefix>_<sf label>."""
+    label = os.path.basename(sf_dir.rstrip("/"))
+    return os.path.join(os.path.dirname(os.path.abspath(__file__)),
+                        "data", "gen", f"{prefix}_{label}")
 
 
-def _ocr_spans_jpeg_media(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Span extraction over baseline-JPEG media payloads (real greyscale
-    Huffman+DCT coder, codecs_img.py). JPEG is LOSSY, but pixel error at
-    quality 90 (<~25 levels) is far inside the pipeline's >170-level
-    ink/background binarization margin, so spans equal the raw run's —
-    the oracle parquet pins exactly that."""
-    from org_dharts_dia_tesseract_spark.operators import extract_spans
-    from org_dharts_dia_tesseract_spark.operators.multimodal import \
-        reencode_media
-    docs, media = _interleaved_corpus(spark, sf_dir, 200)
-    return extract_spans(docs, reencode_media(media, "jpeg"))
-
-
-def _ocr_spans_jpeg_color_media(spark: SparkSession,
-                                sf_dir: str) -> DataFrame:
-    """End-to-end span extraction over COLOR (3-component YCbCr 4:2:0)
-    JPEG payloads: pages deterministically colorized (luma-compressed +
-    spatial chroma ramps, datagen.colorize_page), encoded with the color
-    JPEG path (MCU-interleaved 4 Y + Cb + Cr blocks, chroma box-mean
-    downsample), decoded + luma-collapsed inside the pipeline. Oracle
-    parquet is the same colorize/encode/decode chain run single-process
-    — the reference surface is ImageIO's color JPEG decode
-    (ImageIOHelper.java:270-327)."""
-    from org_dharts_dia_tesseract_spark.operators import extract_spans
-    from org_dharts_dia_tesseract_spark.operators.multimodal import (
-        colorize_media, reencode_media)
-    docs, media = _interleaved_corpus(spark, sf_dir, 200)
-    color = reencode_media(colorize_media(media), "jpeg",
-                           jpeg_subsampling="420")
-    return extract_spans(docs, color)
-
-
-def _ocr_spans_jp2_media(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Span extraction over JPEG 2000 media payloads (codecs_jp2: real
-    MQ arithmetic coder + EBCOT three-pass code-blocks + reversible 5/3
-    wavelet — the last format of ImageIOHelper.java:263-327, previously
-    stubbed). The transform is LOSSLESS, so spans are byte-identical to
-    the raw run's; the oracle parquet pins exactly that."""
-    from org_dharts_dia_tesseract_spark.operators import extract_spans
-    from org_dharts_dia_tesseract_spark.operators.multimodal import \
-        reencode_media
-    docs, media = _interleaved_corpus(spark, sf_dir, 200)
-    return extract_spans(docs, reencode_media(media, "jp2"))
-
-
-def _ocr_spans_pdf_media(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Span extraction over PDF-wrapped media payloads (codecs_pdf: a
-    from-scratch single-page PDF writer/parser, FlateDecode image
-    XObjects via stdlib zlib). The reference REJECTS pdf
-    (ImageIOHelper.java:278-282); the north rule names PDF parse as a
-    main-content tier, so here it is a real codec. Lossless, so spans
-    are byte-identical to the raw run's — the oracle parquet pins that."""
-    from org_dharts_dia_tesseract_spark.operators import extract_spans
-    from org_dharts_dia_tesseract_spark.operators.multimodal import \
-        reencode_media
-    docs, media = _interleaved_corpus(spark, sf_dir, 200)
-    return extract_spans(docs, reencode_media(media, "pdf"))
-
-
-def _ocr_spans_jpeg_prog_media(spark: SparkSession,
-                               sf_dir: str) -> DataFrame:
-    """Span extraction over PROGRESSIVE (SOF2) color 4:2:0 JPEG
-    payloads: spectral-selection + successive-approximation scans,
-    EOBn runs, non-interleaved AC block order (T.81 Annex G) — the
-    dominant JPEG flavor in a real web corpus; ImageIO's stock reader
-    handles it (ImageIOHelper.java:270-327). Progressive encodes the
-    SAME quantized coefficients as baseline, so decode is
-    pixel-identical and the oracle parquet is the color-JPEG
-    expectation re-pinned under this gate's name."""
-    from org_dharts_dia_tesseract_spark.operators import extract_spans
-    from org_dharts_dia_tesseract_spark.operators.multimodal import (
-        colorize_media, reencode_media)
-    docs, media = _interleaved_corpus(spark, sf_dir, 200)
-    color = reencode_media(colorize_media(media), "jpeg",
-                           jpeg_subsampling="420", jpeg_progressive=True)
-    return extract_spans(docs, color)
-
-
-def _ocr_spans_png_palette_media(spark: SparkSession,
-                                 sf_dir: str) -> DataFrame:
-    """Span extraction over PALETTE + Adam7-INTERLACED PNG payloads
-    (indexed color through PLTE, 7-pass de-interlace; grey palettes
-    collapse back to 1-band). Lossless, so spans are byte-identical to
-    the raw run's — the oracle parquet pins that."""
-    from org_dharts_dia_tesseract_spark.operators import extract_spans
-    from org_dharts_dia_tesseract_spark.operators.multimodal import \
-        reencode_media
-    docs, media = _interleaved_corpus(spark, sf_dir, 200)
-    return extract_spans(docs, reencode_media(media, "png",
-                                              png_palette=True,
-                                              png_interlace=True))
-
-
-def _ocr_spans_tiff_bilevel_media(spark: SparkSession,
-                                  sf_dir: str) -> DataFrame:
-    """Span extraction over BILEVEL (1-bit) PackBits TIFF payloads —
-    the classic fax/scanned-document encoding. Threshold-128
-    binarization changes pixel values, so the oracle parquet is the
-    single-process twin of the same encode/decode chain
-    (scripts/gen_expected.py:_bilevel_span_rows), not the raw run."""
-    from org_dharts_dia_tesseract_spark.operators import extract_spans
-    from org_dharts_dia_tesseract_spark.operators.multimodal import \
-        reencode_media
-    docs, media = _interleaved_corpus(spark, sf_dir, 200)
-    return extract_spans(docs, reencode_media(media, "tiff",
-                                              compression="packbits",
-                                              tiff_bits=1))
-
-
-def _ocr_spans_tiff_g4_media(spark: SparkSession,
-                             sf_dir: str) -> DataFrame:
-    """Span extraction over CCITT Group 4 (T.6 MMR, TIFF compression 4)
-    payloads — THE archival scanned-document encoding: 2-D pass/
-    horizontal/vertical coding against the previous line, single
-    stateful strip, WhiteIsZero. G4 is lossless over the thresholded
-    image, so the expectation equals the bilevel gate's (same
-    single-process twin, scripts/gen_expected.py:_bilevel_span_rows)."""
-    from org_dharts_dia_tesseract_spark.operators import extract_spans
-    from org_dharts_dia_tesseract_spark.operators.multimodal import \
-        reencode_media
-    docs, media = _interleaved_corpus(spark, sf_dir, 200)
-    return extract_spans(docs, reencode_media(media, "tiff",
-                                              compression="g4",
-                                              tiff_bits=1))
-
-
-def _ocr_spans_pdf_g4_media(spark: SparkSession,
-                            sf_dir: str) -> DataFrame:
-    """Span extraction over SCANNED-PDF payloads: pages embedded as
-    CCITT Group 4 fax streams (/CCITTFaxDecode, K=-1) — the archival
-    form real scanned PDFs use (~7x smaller than Flate on text pages).
-    Threshold-128 matches the bilevel TIFF chain, so the expectation is
-    the bilevel twin's (scripts/gen_expected.py:_bilevel_span_rows)."""
-    from org_dharts_dia_tesseract_spark.operators import extract_spans
-    from org_dharts_dia_tesseract_spark.operators.multimodal import \
-        reencode_media
-    docs, media = _interleaved_corpus(spark, sf_dir, 200)
-    return extract_spans(docs, reencode_media(media, "pdf",
-                                              pdf_ccitt=True))
+def _with_corrupt(spark: SparkSession, clips: DataFrame, ref_col: str,
+                  corrupt: dict[str, bytes]) -> DataFrame:
+    """`clips` (ref, payload) plus injected undecodable payloads."""
+    bad = spark.createDataFrame(
+        [(ref, bytearray(b)) for ref, b in corrupt.items()],
+        f"{ref_col} string, payload binary")
+    return clips.select(ref_col, "payload").unionByName(bad)
 
 
 def _pq_topk_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -338,14 +237,13 @@ def _pq_topk_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     emits only its local top-k (map-side combine). Training is a
     deterministic id-ordered sample, so the single-process twin
     (scripts/gen_expected.py) runs the SAME numpy kernels over the same
-    parquet and the doubles hash bit-identically."""
+    parquet: ids and ranks match exactly, adc_ip to the 6 significant
+    digits the gate compares (tests/parity.py:_canon_val)."""
     from org_dharts_dia_tesseract_spark.operators.similarity import \
         pq_topk_adc
     from org_dharts_dia_tesseract_spark.sources.tables import load_table
     emb = load_table(spark, sf_dir, "embeddings")
-    qs = emb.where(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb"))
-    return pq_topk_adc(emb, qs, k=5, m=8, ks=16)
+    return pq_topk_adc(emb, _query_vectors(emb), k=5, m=8, ks=16)
 
 
 def _ivfpq_topk_probe_all(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -355,15 +253,14 @@ def _ivfpq_topk_probe_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     window exchange. nprobe == n_lists here so every vector is scored
     (the approximation under test is the quantization, not the
     pruning); the oracle parquet is the single-process twin over the
-    same id-ordered training sample and kernels — bit-identical
-    doubles. Pruned-probe recall is pytest-covered."""
+    same id-ordered training sample and kernels (adc_ip equal to 6
+    significant digits). Pruned-probe recall is pytest-covered."""
     from org_dharts_dia_tesseract_spark.operators.similarity import \
         ivfpq_topk
     from org_dharts_dia_tesseract_spark.sources.tables import load_table
     emb = load_table(spark, sf_dir, "embeddings")
-    qs = emb.where(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb"))
-    return ivfpq_topk(emb, qs, k=5, n_lists=8, nprobe=8, m=8, ks=16)
+    return ivfpq_topk(emb, _query_vectors(emb), k=5, n_lists=8, nprobe=8,
+                      m=8, ks=16)
 
 
 def _ivfpq_indexed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -380,13 +277,10 @@ def _ivfpq_indexed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         ivfpq_topk_indexed, ivfpq_write_index)
     from org_dharts_dia_tesseract_spark.sources.tables import load_table
     emb = load_table(spark, sf_dir, "embeddings")
-    label = os.path.basename(sf_dir.rstrip("/"))
-    path = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                        "data", "gen", f"ivfpq_index_{label}")
+    path = _index_path("ivfpq_index", sf_dir)
     ivfpq_write_index(emb, path, n_lists=8, m=8, ks=16)
-    qs = emb.where(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb"))
-    return ivfpq_topk_indexed(spark, path, qs, k=5, nprobe=2)
+    return ivfpq_topk_indexed(spark, path, _query_vectors(emb), k=5,
+                              nprobe=2)
 
 
 def _semdedup_kept(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -425,9 +319,7 @@ def _semdedup_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
         ivf_write_index, semdedup_indexed)
     from org_dharts_dia_tesseract_spark.sources.tables import load_table
     emb = load_table(spark, sf_dir, "embeddings")
-    label = os.path.basename(sf_dir.rstrip("/"))
-    path = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                        "data", "gen", f"semdedup_index_{label}")
+    path = _index_path("semdedup_index", sf_dir)
     ivf_write_index(emb, path, n_lists=8)
     return semdedup_indexed(spark, path, threshold=0.35)
 
@@ -443,7 +335,7 @@ def _audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     from org_dharts_dia_tesseract_spark.operators.multimodal import \
         audio_features
     from org_dharts_dia_tesseract_spark.sources.tables import audio_table
-    return audio_features(audio_table(spark, 200))
+    return audio_features(audio_table(spark, _MEDIA_DOC_CAP))
 
 
 def _audio_features_drop_policy(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -459,12 +351,10 @@ def _audio_features_drop_policy(spark: SparkSession, sf_dir: str) -> DataFrame:
     from org_dharts_dia_tesseract_spark.operators.multimodal import \
         audio_features
     from org_dharts_dia_tesseract_spark.sources.tables import audio_table
-    corrupt = spark.createDataFrame(
-        [("aud-corrupt-0", bytearray(b"RIFF\x04\x00\x00\x00WAVE")),
-         ("aud-corrupt-1", bytearray(b"not-even-riff-bytes"))],
-        "audio_ref string, payload binary")
-    clips = (audio_table(spark, 200).select("audio_ref", "payload")
-             .unionByName(corrupt))
+    clips = _with_corrupt(spark, audio_table(spark, _MEDIA_DOC_CAP),
+                          "audio_ref",
+                          {"aud-corrupt-0": b"RIFF\x04\x00\x00\x00WAVE",
+                           "aud-corrupt-1": b"not-even-riff-bytes"})
     return audio_features(clips, on_error="drop")
 
 
@@ -480,7 +370,7 @@ def _video_frame_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     from org_dharts_dia_tesseract_spark.operators.multimodal import \
         video_frame_features
     from org_dharts_dia_tesseract_spark.sources.tables import video_table
-    return video_frame_features(video_table(spark, 200), every_k=2)
+    return video_frame_features(video_table(spark, _MEDIA_DOC_CAP), every_k=2)
 
 
 def _video_frame_features_drop_policy(spark: SparkSession,
@@ -494,12 +384,10 @@ def _video_frame_features_drop_policy(spark: SparkSession,
     from org_dharts_dia_tesseract_spark.operators.multimodal import \
         video_frame_features
     from org_dharts_dia_tesseract_spark.sources.tables import video_table
-    corrupt = spark.createDataFrame(
-        [("vid-corrupt-0", bytearray(b"RIFF\x08\x00\x00\x00AVI LIST")),
-         ("vid-corrupt-1", bytearray(b"these are not riff bytes"))],
-        "video_ref string, payload binary")
-    clips = (video_table(spark, 200).select("video_ref", "payload")
-             .unionByName(corrupt))
+    clips = _with_corrupt(spark, video_table(spark, _MEDIA_DOC_CAP),
+                          "video_ref",
+                          {"vid-corrupt-0": b"RIFF\x08\x00\x00\x00AVI LIST",
+                           "vid-corrupt-1": b"these are not riff bytes"})
     return video_frame_features(clips, every_k=2, on_error="drop")
 
 
@@ -510,7 +398,7 @@ def _pdf_text_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     spans, so a writer/parser bug on either side breaks the hash."""
     from org_dharts_dia_tesseract_spark.operators.pdf import (
         docs_to_pdf, pdf_extract_text)
-    docs, _ = _interleaved_corpus(spark, sf_dir, 200)
+    docs, _ = _interleaved_corpus(spark, sf_dir, _MEDIA_DOC_CAP)
     return pdf_extract_text(docs_to_pdf(docs))
 
 
@@ -521,38 +409,13 @@ def _ocr_spans_lang_hin(spark: SparkSession, sf_dir: str) -> DataFrame:
     the 'eng' run — the init language spec changes recognition, not just
     config state (TesseractHandle.init:399-459)."""
     from org_dharts_dia_tesseract_spark.operators import extract_spans
-    docs, media = _interleaved_corpus(spark, sf_dir, 200)
+    docs, media = _interleaved_corpus(spark, sf_dir, _MEDIA_DOC_CAP)
     return extract_spans(docs, media, languages="hin")
 
 
-# Driver-checked order: the correctness gate reads this dict in insertion
-# order and checks the FIRST 50 entries per round, so freshness is a
-# rotation policy. RULE (codified per the round-4 verdict): CHANGED code
-# outranks stale-but-unchanged code — an entry whose implementation
-# changed this round re-enters the window the same round, ahead of any
-# unchanged backlog. Round-5 window (the final one): (0) gates NEW this
-# round (never had a driver row); (1) entries whose round-4 rewrite was
-# never driver-verified (they sat at positions 51-52 of the round-4
-# list); (2) round-4-green entries whose code changed THIS round
-# (hash-spread PQ training sample; audio_features' on_error='drop'
-# policy; output-invariant at gate scale but re-verified anyway);
-# (3) the round-3-green backlog. The registry is
-# 105 entries, so 55 sit past the cap: 47 are round-4-green (1 round
-# stale) and 8 are round-3-green (2 rounds stale — ocr_training_corpus,
-# ocr_annotated_pages, ocr_word_font_attrs, rollup_orders_by_status,
-# ocr_tiff_merge, embedding_norms, order_gap_days,
-# distinct_users_per_type — chosen because
-# their code AND oracles are unchanged
-# since their last green and an in-window sibling exercises the same
-# code path: the extract/pipeline stages via ocr_extract_spans +
-# ocr_hierarchy, font attrs via ocr_hierarchy, rollup aggs via
-# cube_revenue_nation_status, the TIFF writer via the in-window tiff
-# decode gates' shared codec, the embeddings scan via the four
-# in-window ANN gates, lag/lead window fns via running_total_revenue +
-# moving_avg_value_1h, countDistinct aggs on the events scan via
-# events_pivot_counts).
-# Everything past the cap is green in scripts/check_gate.py locally;
-# COVERAGE.md carries the auditable ledger.
+# Registry order, of which the correctness gate checks the first 50; the
+# rotation contract and every placement's rationale: COVERAGE.md, "Driver
+# window".
 _PRIORITY = [
     # (0) new this round
     "semdedup_kept",
@@ -562,7 +425,7 @@ _PRIORITY = [
     "ntile_price_quartiles", "dedup_clusters",
     # (2) round-4-green, code changed this round
     "pq_topk_adc", "ivfpq_topk_probe_all", "audio_features",
-    # (3) round-3-green backlog (44 of 48; see header for the 4 left out)
+    # (3) round-3-green backlog (44 of 48; the 4 left out: COVERAGE.md)
     "ocr_extract_spans", "ocr_hierarchy", "ocr_layout_only",
     "html_main_content", "winnow_fingerprints", "pii_scrub",
     "type_token_ratio", "tfidf_top_terms", "doc_fingerprint",
@@ -581,39 +444,9 @@ _PRIORITY = [
     "ocr_spans_gif_media", "ocr_spans_jpeg_media", "ocr_spans_jp2_media",
     "ocr_spans_pdf_media", "pdf_text_extract", "ocr_spans_lang_hin",
     "ocr_unlv_text",
-    # ---- 50-entry driver cap lands here ----
-    # semdedup_indexed (new in round 5, added after the window was
-    # allocated): its entire prune back half is the in-window
-    # semdedup_kept's `_semdedup_over_assigned` (bit-identical kept
-    # set), and its stored-index read path is in-window via
-    # ivfpq_indexed_topk — so the only never-driver-checked code is the
-    # two-line stored-assignment scan; pytest + local mirror cover it
-    "semdedup_indexed",
-    # bloom_novel_docs (new in round 5, added after the window was
-    # allocated): Bloom-filter incremental dedup with a pure ANSI-SQL
-    # oracle; its md5-chunk hash portability is driver-verified
-    # in-window by the minhash/simhash gates that use the identical
-    # conv(substr(md5)) trick, and pytest + the local mirror value-check
-    # the bitmap path (tests/test_bloom.py, 6 tests + auto parity)
-    "bloom_novel_docs",
-    # stratified_sample_docs (new in round 5, post-allocation): pure
-    # codegen CASE+filter over the same portable md5 hash the in-window
-    # minhash/simhash gates verify; pytest tests/test_sampling.py +
-    # auto-parity at sf0.001 + local mirror
-    "stratified_sample_docs",
-    # ocr_page_osd (round-3-green, unchanged) deferred to make room for
-    # semdedup_kept (new in round 5): OSD rides the same page-analysis
-    # kernels the in-window hierarchy/layout gates verify end-to-end
-    "ocr_page_osd",
-    # round-3-greens deferred to make room for changed/new round-5 code
-    # (audio_features' on_error='drop'; dedup_clusters_star): the TIFF
-    # merge writer is exercised in-window by the tiff decode gates'
-    # shared codec, and embedding_norms' trivial per-row norm rides the
-    # same embeddings scan that four in-window ANN gates traverse with
-    # far stronger checks
-    "ocr_tiff_merge", "embedding_norms",
-    # round-3-green entries deliberately deferred (2 rounds stale,
-    # rationale in the header comment)
+    # ---- the 50-entry cap lands here: nothing below is gate-checked
+    "semdedup_indexed", "bloom_novel_docs", "stratified_sample_docs",
+    "ocr_page_osd", "ocr_tiff_merge", "embedding_norms",
     "ocr_training_corpus", "ocr_annotated_pages", "ocr_word_font_attrs",
     "rollup_orders_by_status",
     # round-4-green tranche (1 round stale), stalest-first convention
@@ -653,17 +486,8 @@ _RASTER_GATES = {
     "ocr_annotated_pages": _ocr_annotated_pages,
     "ocr_word_font_attrs": _ocr_word_font_attrs,
     "ocr_dpi_font_attrs": _ocr_dpi_font_attrs,
-    "ocr_spans_bmp_media": _ocr_spans_bmp_media,
-    "ocr_spans_deflate_media": _ocr_spans_deflate_media,
-    "ocr_spans_png_media": _ocr_spans_png_media,
-    "ocr_spans_gif_media": _ocr_spans_gif_media,
-    "ocr_spans_jpeg_media": _ocr_spans_jpeg_media,
-    "ocr_spans_jpeg_color_media": _ocr_spans_jpeg_color_media,
-    "ocr_spans_jpeg_prog_media": _ocr_spans_jpeg_prog_media,
-    "ocr_spans_png_palette_media": _ocr_spans_png_palette_media,
-    "ocr_spans_tiff_bilevel_media": _ocr_spans_tiff_bilevel_media,
-    "ocr_spans_tiff_g4_media": _ocr_spans_tiff_g4_media,
-    "ocr_spans_pdf_g4_media": _ocr_spans_pdf_g4_media,
+    **{name: _media_span_gate(**kw)
+       for name, kw in _MEDIA_SPAN_GATES.items()},
     "audio_features": _audio_features,
     "audio_features_drop_policy": _audio_features_drop_policy,
     "video_frame_features_drop_policy": _video_frame_features_drop_policy,
@@ -673,8 +497,6 @@ _RASTER_GATES = {
     "semdedup_kept": _semdedup_kept,
     "semdedup_indexed": _semdedup_indexed,
     "video_frame_features": _video_frame_features,
-    "ocr_spans_jp2_media": _ocr_spans_jp2_media,
-    "ocr_spans_pdf_media": _ocr_spans_pdf_media,
     "pdf_text_extract": _pdf_text_extract,
     "ocr_spans_lang_hin": _ocr_spans_lang_hin,
     "ocr_unlv_text": _ocr_unlv_text,

@@ -3,6 +3,9 @@ __spark_entry__ registry entries: SQL parity vs DuckDB where an oracle
 exists, rows-only otherwise. Run before shipping a round:
 
     python scripts/check_gate.py [sf_dir] [--only name1,name2]
+
+The master is local[$SPARK_GRAFT_CPUS] (session.get_spark), the same
+as the pytest run; set it to the host's core count.
 """
 
 from __future__ import annotations
@@ -32,8 +35,7 @@ def main() -> None:
         only = set(args[i + 1].split(","))
         del args[i:i + 2]
     sf_dir = args[0] if args else "/root/testdata/sf0.01"
-    spark = get_spark("local[16]", app_name="check-gate",
-                      shuffle_partitions=16)
+    spark = get_spark(app_name="check-gate")
     qs, oq = entry.queries(), entry.oracle_sql()
     if only:
         missing = only - set(qs)

@@ -12,13 +12,24 @@ assembly bugs show up as driver hash mismatches.
 
 Determinism & scale-independence: the interleaved corpus is a pure
 function of the document COUNT (doc ids `doc-%08d`; content keyed by id
-— datagen.py), and every gate caps its doc budget at 400/200/100, while
-each driver sf dir holds >= 500 documents. The expectations are
-therefore valid for ANY sf dir (sf0.001/sf0.01/sf0.1 alike), except
-`html_main_content`, which reads the real documents table and is
-generated per sf (default sf0.01 — the driver's gate scale).
+— datagen.py), and every gate caps its doc budget at 400/200/100
+(`__spark_entry__._*_DOC_CAP`, imported here with the span-over-media
+gate table; importing the entry module loads pyspark modules but never
+starts a session), while each gate sf dir holds >= 500 documents.
+The expectations are therefore valid for ANY sf dir (sf0.001/sf0.01/
+sf0.1 alike), except `html_main_content` and the embedding gates, which
+read the sf dir's tables and are generated per sf (default sf0.01, the
+gate scale).
 
-Run (regenerates tests/expected/):  python scripts/gen_expected.py
+Reproducibility: a regeneration rewrites 32 of the 35 parquets
+byte-identically. The other three (pq_topk_adc, ivfpq_topk_probe_all,
+ivfpq_indexed_topk) keep the same ids and ranks, but adc_ip can move in
+the last bits (<= 1.2e-16 seen on a 4-core x86 host). The gate compares
+floats at 6 significant digits (tests/parity.py:_canon_val), so both
+versions pass; those three files are not re-committed from a
+regeneration.
+
+Run (regenerates tests/expected/):  python scripts/gen_expected.py [sf_dir]
 """
 
 from __future__ import annotations
@@ -37,6 +48,8 @@ import pyarrow.parquet as pq
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
+from __spark_entry__ import (_ANNOTATED_DOC_CAP, _MEDIA_DOC_CAP,
+                             _MEDIA_SPAN_GATES, _PIPELINE_DOC_CAP)
 from org_dharts_dia_tesseract_spark.codecs_img import encode_tiff_multipage
 from org_dharts_dia_tesseract_spark.datagen import (doc_spans_for,
                                                     media_row_for)
@@ -48,11 +61,6 @@ from org_dharts_dia_tesseract_spark.oracle.page import (analyze_page, resolve_pp
                                                         document_spans)
 
 EXPECTED_DIR = os.path.join(REPO, "tests", "expected")
-
-# doc budgets — MUST mirror __spark_entry__._PIPELINE_DOC_CAP et al.
-CAP_PIPELINE = 400
-CAP_MEDIA = 200
-CAP_ANNOTATED = 100
 
 _ANNOT_LEVELS = ("BLOCK", "TEXTLINE", "WORD")
 
@@ -112,68 +120,13 @@ def _span_rows(corpus: Corpus, n_docs: int,
     return rows
 
 
+_SPANS_SCHEMA = pa.schema({"doc_id": pa.string(), "seq": pa.int64(),
+                           "kind": pa.string(), "text": pa.string(),
+                           "media_ref": pa.string()})
+
+
 def _spans_table(rows: list[dict]) -> pa.Table:
-    """extract_spans expectation (also the bmp/deflate re-encode gates:
-    the codecs round-trip losslessly, so spans are identical)."""
-    return pa.table({
-        "doc_id": pa.array([r["doc_id"] for r in rows], pa.string()),
-        "seq": pa.array([r["seq"] for r in rows], pa.int64()),
-        "kind": pa.array([r["kind"] for r in rows], pa.string()),
-        "text": pa.array([r["text"] for r in rows], pa.string()),
-        "media_ref": pa.array([r["media_ref"] for r in rows], pa.string()),
-    })
-
-
-def _color_jpeg_span_rows(corpus: Corpus, n_docs: int,
-                          progressive: bool = False) -> list[dict]:
-    """Spans over colorized + 4:2:0 color-JPEG media: the single-process
-    twin of extract_spans(docs, reencode_media(colorize_media(media),
-    'jpeg', jpeg_subsampling='420')) — same colorize/encode/decode
-    kernels assembled with plain Python. `progressive` runs the SOF2
-    scan-script twin (pixel-identical by construction; the separate
-    expectation file keeps the gate self-contained)."""
-    from org_dharts_dia_tesseract_spark.codecs_img import encode_jpeg
-    from org_dharts_dia_tesseract_spark.datagen import colorize_page
-    cache: dict[str, dict] = {}
-
-    def lookup(ref: str) -> dict:
-        if ref not in cache:
-            m = corpus.media(ref)
-            img = decode_payload(m["payload"], m["width"], m["height"],
-                                 m["bands"])
-            blob = encode_jpeg(colorize_page(img), subsampling="420",
-                               progressive=progressive)
-            cache[ref] = {**m, "bands": 3, "payload": blob}
-        return cache[ref]
-
-    rows = []
-    for doc in corpus.docs[:n_docs]:
-        rows.extend(document_spans(doc, lookup))
-    return rows
-
-
-def _bilevel_span_rows(corpus: Corpus, n_docs: int) -> list[dict]:
-    """Spans over 1-bit PackBits TIFF media: the single-process twin of
-    extract_spans(docs, reencode_media(media, 'tiff',
-    compression='packbits', tiff_bits=1)). Threshold-128 binarization
-    changes pixels, so this expectation is computed through the same
-    encode/decode chain rather than aliased to the raw run."""
-    from org_dharts_dia_tesseract_spark.codecs_img import encode_tiff
-    cache: dict[str, dict] = {}
-
-    def lookup(ref: str) -> dict:
-        if ref not in cache:
-            m = corpus.media(ref)
-            img = decode_payload(m["payload"], m["width"], m["height"],
-                                 m["bands"])
-            blob = encode_tiff(img, compression="packbits", bits=1)
-            cache[ref] = {**m, "payload": blob}
-        return cache[ref]
-
-    rows = []
-    for doc in corpus.docs[:n_docs]:
-        rows.extend(document_spans(doc, lookup))
-    return rows
+    return pa.Table.from_pylist(rows, schema=_SPANS_SCHEMA)
 
 
 def _hierarchy_rows(corpus: Corpus, n_docs: int, recognize: bool = True,
@@ -196,27 +149,16 @@ _HIER_BOOL = ("font_bold", "font_italic", "font_underlined",
               "is_subscript", "is_superscript", "is_dropcap")
 
 
-def _hierarchy_table(rows: list[dict]) -> pa.Table:
-    cols: dict[str, pa.Array] = {}
-    names = ["doc_id", "media_ref", "offset", "level"] + list(_HIER_I32) + \
-        list(_HIER_I32_NULL) + ["block_type", "text", "confidence",
-                                "is_virtual", "justification", "orientation",
-                                "writing_direction", "textline_order",
-                                "deskew_angle", "font_name"] + \
-        list(_HIER_BOOL)
-    for name in names:
-        vals = [r.get(name) for r in rows]
-        if name in ("offset",) or name in _HIER_I32 or name in _HIER_I32_NULL:
-            cols[name] = pa.array(vals, pa.int32())
-        elif name in ("confidence", "deskew_angle"):
-            cols[name] = pa.array(
-                [None if v is None else float(np.float32(v)) for v in vals],
-                pa.float32())
-        elif name == "is_virtual" or name in _HIER_BOOL:
-            cols[name] = pa.array(vals, pa.bool_())
-        else:
-            cols[name] = pa.array(vals, pa.string())
-    return pa.table(cols)
+_HIERARCHY_SCHEMA = pa.schema(
+    [("doc_id", pa.string()), ("media_ref", pa.string()),
+     ("offset", pa.int32()), ("level", pa.string())]
+    + [(n, pa.int32()) for n in _HIER_I32 + _HIER_I32_NULL]
+    + [("block_type", pa.string()), ("text", pa.string()),
+       ("confidence", pa.float32()), ("is_virtual", pa.bool_()),
+       ("justification", pa.string()), ("orientation", pa.string()),
+       ("writing_direction", pa.string()), ("textline_order", pa.string()),
+       ("deskew_angle", pa.float32()), ("font_name", pa.string())]
+    + [(n, pa.bool_()) for n in _HIER_BOOL])
 
 
 def _layout_table(corpus: Corpus, n_docs: int) -> pa.Table:
@@ -224,12 +166,21 @@ def _layout_table(corpus: Corpus, n_docs: int) -> pa.Table:
     for r in _hierarchy_rows(corpus, n_docs, recognize=False):
         k = (r["media_ref"], r["level"])
         counts[k] = counts.get(k, 0) + 1
-    keys = list(counts)
-    return pa.table({
-        "media_ref": pa.array([k[0] for k in keys], pa.string()),
-        "level": pa.array([k[1] for k in keys], pa.string()),
-        "n_nodes": pa.array([counts[k] for k in keys], pa.int64()),
-    })
+    return pa.Table.from_pylist(
+        [{"media_ref": ref, "level": lvl, "n_nodes": n}
+         for (ref, lvl), n in counts.items()],
+        schema=pa.schema({"media_ref": pa.string(), "level": pa.string(),
+                          "n_nodes": pa.int64()}))
+
+
+_FONT_ATTRS_SCHEMA = pa.schema(
+    [("doc_id", pa.string()), ("media_ref", pa.string())]
+    + [(n, pa.int32()) for n in ("block_id", "para_id", "line_id")]
+    + [(n, pa.bool_()) for n in ("font_bold", "font_italic",
+                                 "font_underlined", "font_monospace",
+                                 "font_serif", "font_smallcaps")]
+    + [("font_pointsize", pa.int32()), ("font_id", pa.int32()),
+       ("font_name", pa.string())])
 
 
 def _font_attrs_table(rows: list[dict]) -> pa.Table:
@@ -242,22 +193,8 @@ def _font_attrs_table(rows: list[dict]) -> pa.Table:
              r["line_id"])
         if k not in best or r["seq"] < best[k]["seq"]:
             best[k] = r
-    out = sorted(best.items())
-    key_names = ("doc_id", "media_ref", "block_id", "para_id", "line_id")
-    cols = {}
-    for i, name in enumerate(key_names):
-        vals = [k[i] for k, _ in out]
-        cols[name] = pa.array(
-            vals, pa.string() if i < 2 else pa.int32())
-    for name in ("font_bold", "font_italic", "font_underlined",
-                 "font_monospace", "font_serif", "font_smallcaps"):
-        cols[name] = pa.array([r[name] for _, r in out], pa.bool_())
-    cols["font_pointsize"] = pa.array([r["font_pointsize"] for _, r in out],
-                                      pa.int32())
-    cols["font_id"] = pa.array([r["font_id"] for _, r in out], pa.int32())
-    cols["font_name"] = pa.array([r["font_name"] for _, r in out],
-                                 pa.string())
-    return pa.table(cols)
+    return pa.Table.from_pylist([best[k] for k in sorted(best)],
+                                schema=_FONT_ATTRS_SCHEMA)
 
 
 def _unlv_table(rows: list[dict], reject_below: float = 50.0,
@@ -285,35 +222,28 @@ def _unlv_table(rows: list[dict], reject_below: float = 50.0,
         order_key = b * 1_000_000 + p * 10_000 + ln
         pages.setdefault((doc_id, ref), []).append(
             (order_key, " ".join(w for _, w in ws)))
-    out = sorted(pages.items())
-    return pa.table({
-        "doc_id": pa.array([k[0] for k, _ in out], pa.string()),
-        "media_ref": pa.array([k[1] for k, _ in out], pa.string()),
-        "unlv_text": pa.array(
-            ["\n".join(t for _, t in sorted(ls)) for _, ls in out],
-            pa.string()),
-    })
+    return pa.Table.from_pylist(
+        [{"doc_id": doc_id, "media_ref": ref,
+          "unlv_text": "\n".join(t for _, t in sorted(ls))}
+         for (doc_id, ref), ls in sorted(pages.items())],
+        schema=pa.schema({"doc_id": pa.string(), "media_ref": pa.string(),
+                          "unlv_text": pa.string()}))
 
 
 def _osd_table(corpus: Corpus, n_docs: int) -> pa.Table:
-    recs = []
-    for doc, s in corpus.image_spans(n_docs):
-        osd = detect_page_osd(corpus.image(s["media_ref"]))
-        recs.append((doc["doc_id"], s["media_ref"], osd["orientation"],
-                     osd["rotation_degrees"],
-                     float(np.float32(osd["osd_confidence"])), osd["script"]))
-    return pa.table({
-        "doc_id": pa.array([r[0] for r in recs], pa.string()),
-        "media_ref": pa.array([r[1] for r in recs], pa.string()),
-        "orientation": pa.array([r[2] for r in recs], pa.string()),
-        "rotation_degrees": pa.array([r[3] for r in recs], pa.int32()),
-        "osd_confidence": pa.array([r[4] for r in recs], pa.float32()),
-        "script": pa.array([r[5] for r in recs], pa.string()),
-    })
+    return pa.Table.from_pylist(
+        [{"doc_id": doc["doc_id"], "media_ref": s["media_ref"],
+          **detect_page_osd(corpus.image(s["media_ref"]))}
+         for doc, s in corpus.image_spans(n_docs)],
+        schema=pa.schema({"doc_id": pa.string(), "media_ref": pa.string(),
+                          "orientation": pa.string(),
+                          "rotation_degrees": pa.int32(),
+                          "osd_confidence": pa.float32(),
+                          "script": pa.string()}))
 
 
 def _tiff_merge_table(corpus: Corpus, n_docs: int) -> pa.Table:
-    recs = []
+    rows = []
     for doc in corpus.docs[:n_docs]:
         refs = [s["media_ref"] for s in sorted(doc["spans"],
                                                key=lambda s: s["offset"])
@@ -321,28 +251,23 @@ def _tiff_merge_table(corpus: Corpus, n_docs: int) -> pa.Table:
         if not refs:
             continue
         blob = encode_tiff_multipage([corpus.image(r) for r in refs])
-        recs.append((doc["doc_id"], len(refs), len(blob)))
-    return pa.table({
-        "doc_id": pa.array([r[0] for r in recs], pa.string()),
-        "n_pages": pa.array([r[1] for r in recs], pa.int32()),
-        "tiff_bytes": pa.array([r[2] for r in recs], pa.int32()),
-    })
+        rows.append({"doc_id": doc["doc_id"], "n_pages": len(refs),
+                     "tiff_bytes": len(blob)})
+    return pa.Table.from_pylist(rows, schema=pa.schema(
+        {"doc_id": pa.string(), "n_pages": pa.int32(),
+         "tiff_bytes": pa.int32()}))
 
 
 def _annotated_table(corpus: Corpus, n_docs: int) -> pa.Table:
-    recs = []
+    rows = []
     for doc, s in corpus.image_spans(n_docs):
-        m = corpus.media(s["media_ref"])
         res = corpus.page(s["media_ref"])
         n_boxes = sum(1 for r in res.rows() if r["level"] in _ANNOT_LEVELS)
         if n_boxes:
-            recs.append((s["media_ref"], m["width"], m["height"], n_boxes))
-    return pa.table({
-        "media_ref": pa.array([r[0] for r in recs], pa.string()),
-        "width": pa.array([r[1] for r in recs], pa.int32()),
-        "height": pa.array([r[2] for r in recs], pa.int32()),
-        "n_boxes": pa.array([r[3] for r in recs], pa.int32()),
-    })
+            rows.append({**corpus.media(s["media_ref"]), "n_boxes": n_boxes})
+    return pa.Table.from_pylist(rows, schema=pa.schema(
+        {"media_ref": pa.string(), "width": pa.int32(),
+         "height": pa.int32(), "n_boxes": pa.int32()}))
 
 
 # -- training corpus (operators.pipeline twin, hashlib-portable) ------------
@@ -409,22 +334,16 @@ def _training_table(span_rows: list[dict], min_tokens: int = 3) -> pa.Table:
         winner = min(ids)
         deduped[winner] = {**per_doc[winner], "n_copies": len(ids)}
     losers = _minhash_losers({k: v["text"] for k, v in deduped.items()})
-    out = sorted(deduped.items())
-    return pa.table({
-        "doc_id": pa.array([k for k, _ in out], pa.string()),
-        "n_text_spans": pa.array([r["n_text_spans"] for _, r in out],
-                                 pa.int64()),
-        "n_chars": pa.array([r["n_chars"] for _, r in out], pa.int64()),
-        "n_tokens": pa.array([r["n_tokens"] for _, r in out], pa.int64()),
-        "punct_ratio": pa.array([r["punct_ratio"] for _, r in out],
-                                pa.float64()),
-        "fingerprint": pa.array([r["fingerprint"] for _, r in out],
-                                pa.string()),
-        "n_copies": pa.array([r["n_copies"] for _, r in out], pa.int64()),
-        "near_dup": pa.array([k in losers for k, _ in out], pa.bool_()),
-        "keep": pa.array([k not in losers and r["n_tokens"] >= min_tokens
-                          for k, r in out], pa.bool_()),
-    })
+    return pa.Table.from_pylist(
+        [{"doc_id": k, **r, "near_dup": k in losers,
+          "keep": k not in losers and r["n_tokens"] >= min_tokens}
+         for k, r in sorted(deduped.items())],
+        schema=pa.schema({"doc_id": pa.string(), "n_text_spans": pa.int64(),
+                          "n_chars": pa.int64(), "n_tokens": pa.int64(),
+                          "punct_ratio": pa.float64(),
+                          "fingerprint": pa.string(),
+                          "n_copies": pa.int64(), "near_dup": pa.bool_(),
+                          "keep": pa.bool_()}))
 
 
 def _html_main_table(sf_dir: str) -> pa.Table:
@@ -432,7 +351,7 @@ def _html_main_table(sf_dir: str) -> pa.Table:
     docs = duckdb.sql(
         f"SELECT doc_id, text, source FROM '{sf_dir}/documents.parquet'"
     ).df()
-    contents = []
+    rows = []
     for r in docs.itertuples(index=False):
         html = (f"<html><head><title>d{r.doc_id}</title>"
                 "<script>var x = 1 < 2;</script></head>"
@@ -440,28 +359,44 @@ def _html_main_table(sf_dir: str) -> pa.Table:
                 f"</nav><header><h1>{r.source}</h1></header>"
                 f"<!-- ad slot --><p>{r.text}</p>"
                 "<footer>&copy; 2026</footer></body></html>")
-        contents.append(_main_content_of(html, 20, 0.4))
-    return pa.table({
-        "doc_id": pa.array(list(docs["doc_id"]), pa.int64()),
-        "content": pa.array(contents, pa.string()),
-    })
+        rows.append({"doc_id": r.doc_id,
+                     "content": _main_content_of(html, 20, 0.4)})
+    return pa.Table.from_pylist(rows, schema=pa.schema(
+        {"doc_id": pa.int64(), "content": pa.string()}))
 
 
 def _pdf_text_table(corpus: Corpus, n_docs: int) -> pa.Table:
     """pdf_text_extract expectation, computed PDF-FREE: the text lines a
     correct writer+parser round-trip must reproduce are exactly the raw
     text spans in offset order (operators/pdf.py:_text_lines twin)."""
-    ids, n_lines, texts = [], [], []
+    rows = []
     for doc in corpus.docs[:n_docs]:
         lines = [s["text"] for s in sorted(doc["spans"],
                                            key=lambda s: s["offset"])
                  if s["kind"] == "text"]
-        ids.append(doc["doc_id"])
-        n_lines.append(len(lines))
-        texts.append("\n".join(lines))
-    return pa.table({"doc_id": pa.array(ids, pa.string()),
-                     "n_lines": pa.array(n_lines, pa.int32()),
-                     "text": pa.array(texts, pa.string())})
+        rows.append({"doc_id": doc["doc_id"], "n_lines": len(lines),
+                     "text": "\n".join(lines)})
+    return pa.Table.from_pylist(rows, schema=pa.schema(
+        {"doc_id": pa.string(), "n_lines": pa.int32(), "text": pa.string()}))
+
+
+_TOPK_SCHEMA = pa.schema({"q_id": pa.int64(), "vec_id": pa.int64(),
+                          "adc_ip": pa.float64(), "rk": pa.int32()})
+
+
+def _topk_table(ids: np.ndarray, X: np.ndarray, score,
+                k: int = 5) -> pa.Table:
+    """Rank-k neighbours of each gate query (vec_id < 5), the query
+    itself excluded, ordered by score desc then vec_id asc. `score(q)`
+    returns (candidate ids, scores) over the vectors a method scans."""
+    rows = []
+    for qid in ids[ids < 5]:
+        cand, s = score(X[int(np.nonzero(ids == qid)[0][0])])
+        top = [b for b in np.lexsort((cand, -s)) if cand[b] != qid][:k]
+        rows += [{"q_id": int(qid), "vec_id": int(cand[b]),
+                  "adc_ip": float(s[b]), "rk": rk}
+                 for rk, b in enumerate(top, 1)]
+    return pa.Table.from_pylist(rows, schema=_TOPK_SCHEMA)
 
 
 # -- main -------------------------------------------------------------------
@@ -469,69 +404,46 @@ def _pdf_text_table(corpus: Corpus, n_docs: int) -> pa.Table:
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     os.makedirs(EXPECTED_DIR, exist_ok=True)
-    corpus = Corpus(CAP_PIPELINE)
+    corpus = Corpus(_PIPELINE_DOC_CAP)
 
     def write(name: str, table: pa.Table) -> None:
         pq.write_table(table, os.path.join(EXPECTED_DIR, f"{name}.parquet"))
         print(f"{name}: {table.num_rows} rows", flush=True)
 
-    spans = _span_rows(corpus, CAP_PIPELINE)
-    cut = f"doc-{CAP_MEDIA:08d}"
-    spans_200 = [r for r in spans if r["doc_id"] < cut]
+    spans = _span_rows(corpus, _PIPELINE_DOC_CAP)
     write("ocr_extract_spans", _spans_table(spans))
-    write("ocr_spans_bmp_media", _spans_table(spans_200))
-    write("ocr_spans_deflate_media", _spans_table(spans_200))
-    write("ocr_spans_png_media", _spans_table(spans_200))
-    write("ocr_spans_gif_media", _spans_table(spans_200))
-    write("ocr_spans_jpeg_media", _spans_table(spans_200))
-    write("ocr_spans_jpeg_color_media",
-          _spans_table(_color_jpeg_span_rows(corpus, CAP_MEDIA)))
-    write("ocr_spans_jpeg_prog_media",
-          _spans_table(_color_jpeg_span_rows(corpus, CAP_MEDIA,
-                                             progressive=True)))
-    write("ocr_spans_png_palette_media", _spans_table(spans_200))
-    bilevel = _spans_table(_bilevel_span_rows(corpus, CAP_MEDIA))
-    write("ocr_spans_tiff_bilevel_media", bilevel)
-    # G4 TIFF and CCITT-in-PDF are lossless over the same thresholded
-    # image -> same expectation
-    write("ocr_spans_tiff_g4_media", bilevel)
-    write("ocr_spans_pdf_g4_media", bilevel)
-    write("ocr_spans_jp2_media", _spans_table(spans_200))
-    write("ocr_spans_pdf_media", _spans_table(spans_200))
-    write("pdf_text_extract", _pdf_text_table(corpus, CAP_MEDIA))
+    # every span-over-media gate must reproduce the raw run's spans, so
+    # each one's expectation is the raw run's first-200-doc slice
+    cut = f"doc-{_MEDIA_DOC_CAP:08d}"
+    media_spans = _spans_table([r for r in spans if r["doc_id"] < cut])
+    for name in _MEDIA_SPAN_GATES:
+        write(name, media_spans)
+    write("pdf_text_extract", _pdf_text_table(corpus, _MEDIA_DOC_CAP))
     write("ocr_spans_lang_hin",
-          _spans_table(_span_rows(corpus, CAP_MEDIA, langs=("hin",))))
-    hier = list(_hierarchy_rows(corpus, CAP_PIPELINE))
-    write("ocr_hierarchy", _hierarchy_table(hier))
-    write("ocr_layout_only", _layout_table(corpus, CAP_PIPELINE))
+          _spans_table(_span_rows(corpus, _MEDIA_DOC_CAP, langs=("hin",))))
+    hier = list(_hierarchy_rows(corpus, _PIPELINE_DOC_CAP))
+    write("ocr_hierarchy",
+          pa.Table.from_pylist(hier, schema=_HIERARCHY_SCHEMA))
+    write("ocr_layout_only", _layout_table(corpus, _PIPELINE_DOC_CAP))
     write("ocr_word_font_attrs", _font_attrs_table(hier))
     # embedded-DPI gate: TIFF re-encode with XResolution=192; pointsize
     # must follow the embedded value (metadata > table column > default)
     write("ocr_dpi_font_attrs", _font_attrs_table(
-        list(_hierarchy_rows(corpus, CAP_MEDIA, ppi=192))))
+        list(_hierarchy_rows(corpus, _MEDIA_DOC_CAP, ppi=192))))
     # audio tier: single-process twin of operators.multimodal.
     # audio_features over the same deterministic clips (shared
     # codecs_wav.wav_features kernel -> bit-identical doubles)
     from org_dharts_dia_tesseract_spark.codecs_wav import wav_features
     from org_dharts_dia_tesseract_spark.datagen import audio_row_for
-    arows = []
-    for i in range(CAP_MEDIA):
-        ref = f"aud-{i:08d}"
-        arows.append({"audio_ref": ref,
-                      **wav_features(audio_row_for(ref)["payload"])})
-    audio_tbl = pa.table({
-        "audio_ref": pa.array([r["audio_ref"] for r in arows], pa.string()),
-        "n_samples": pa.array([r["n_samples"] for r in arows], pa.int32()),
-        "channels": pa.array([r["channels"] for r in arows], pa.int32()),
-        "sample_rate": pa.array([r["sample_rate"] for r in arows],
-                                pa.int32()),
-        "duration_s": pa.array([r["duration_s"] for r in arows],
-                               pa.float64()),
-        "rms": pa.array([r["rms"] for r in arows], pa.float64()),
-        "peak": pa.array([r["peak"] for r in arows], pa.float64()),
-        "zero_crossing_rate": pa.array(
-            [r["zero_crossing_rate"] for r in arows], pa.float64()),
-    })
+    refs = [f"aud-{i:08d}" for i in range(_MEDIA_DOC_CAP)]
+    audio_tbl = pa.Table.from_pylist(
+        [{"audio_ref": ref, **wav_features(audio_row_for(ref)["payload"])}
+         for ref in refs],
+        schema=pa.schema({"audio_ref": pa.string(), "n_samples": pa.int32(),
+                          "channels": pa.int32(), "sample_rate": pa.int32(),
+                          "duration_s": pa.float64(), "rms": pa.float64(),
+                          "peak": pa.float64(),
+                          "zero_crossing_rate": pa.float64()}))
     write("audio_features", audio_tbl)
     # the drop-policy gate shares the clean expectation: the gate's
     # input is the same 200 clips PLUS injected undecodable payloads,
@@ -546,26 +458,16 @@ def main() -> None:
     from org_dharts_dia_tesseract_spark.codecs_avi import \
         avi_frame_features
     from org_dharts_dia_tesseract_spark.datagen import video_row_for
-    vrows = []
-    for i in range(CAP_MEDIA):
-        ref = f"vid-{i:08d}"
-        for feats in avi_frame_features(video_row_for(ref)["payload"],
-                                        every_k=2):
-            vrows.append({"video_ref": ref, **feats})
-    video_tbl = pa.table({
-        "video_ref": pa.array([r["video_ref"] for r in vrows],
-                              pa.string()),
-        "frame_idx": pa.array([r["frame_idx"] for r in vrows],
-                              pa.int32()),
-        "n_frames": pa.array([r["n_frames"] for r in vrows], pa.int32()),
-        "width": pa.array([r["width"] for r in vrows], pa.int32()),
-        "height": pa.array([r["height"] for r in vrows], pa.int32()),
-        "fps": pa.array([r["fps"] for r in vrows], pa.int32()),
-        "mean_luma": pa.array([r["mean_luma"] for r in vrows],
-                              pa.float64()),
-        "ink_ratio": pa.array([r["ink_ratio"] for r in vrows],
-                              pa.float64()),
-    })
+    refs = [f"vid-{i:08d}" for i in range(_MEDIA_DOC_CAP)]
+    video_tbl = pa.Table.from_pylist(
+        [{"video_ref": ref, **feats} for ref in refs
+         for feats in avi_frame_features(video_row_for(ref)["payload"],
+                                         every_k=2)],
+        schema=pa.schema({"video_ref": pa.string(), "frame_idx": pa.int32(),
+                          "n_frames": pa.int32(), "width": pa.int32(),
+                          "height": pa.int32(), "fps": pa.int32(),
+                          "mean_luma": pa.float64(),
+                          "ink_ratio": pa.float64()}))
     write("video_frame_features", video_tbl)
     # video drop-policy gate shares the clean expectation (same
     # rationale as the audio one above)
@@ -574,9 +476,10 @@ def main() -> None:
     # same embeddings parquet; like html_main_content this expectation
     # is per-sf (trained on the sf dir's vectors; default sf0.01 = the
     # driver's gate scale)
-    import numpy as np
     from org_dharts_dia_tesseract_spark.operators.similarity import (
-        _as_f64, _pq_adc_ip_np, _pq_encode_np, _pq_train_np)
+        _as_f64, _centroid_dists, _ivfpq_encode_np, _ivfpq_train_np,
+        _kmeans_np, _pq_adc_ip_np, _pq_encode_np, _pq_train_np,
+        _semdedup_prune_np)
     et = pq.read_table(os.path.join(sf_dir, "embeddings.parquet"))
     order = np.argsort(et["vec_id"].to_numpy())
     ids = et["vec_id"].to_numpy()[order]
@@ -592,116 +495,53 @@ def main() -> None:
         "init_sample in the gate queries")
     books = _pq_train_np(X, m=8, ks=16)
     codes = _pq_encode_np(X, books)
-    prows = []
-    for qid in [i for i in ids if i < 5]:
-        qi = int(np.nonzero(ids == qid)[0][0])
-        s = _pq_adc_ip_np(X[qi], books, codes)
-        keep = np.lexsort((ids, -s))
-        rk = 0
-        for b in keep:
-            if ids[b] == qid:
-                continue
-            rk += 1
-            if rk > 5:
-                break
-            prows.append({"q_id": int(qid), "vec_id": int(ids[b]),
-                          "adc_ip": float(s[b]), "rk": rk})
-    write("pq_topk_adc", pa.table({
-        "q_id": pa.array([r["q_id"] for r in prows], pa.int64()),
-        "vec_id": pa.array([r["vec_id"] for r in prows], pa.int64()),
-        "adc_ip": pa.array([r["adc_ip"] for r in prows], pa.float64()),
-        "rk": pa.array([r["rk"] for r in prows], pa.int32()),
-    }))
+    write("pq_topk_adc", _topk_table(
+        ids, X, lambda q: (ids, _pq_adc_ip_np(q, books, codes))))
     # composed IVF-PQ twin (probe-all): coarse + residual codebooks on
     # the same id-ordered sample; score = q.centroid + ADC(q, residual)
-    from org_dharts_dia_tesseract_spark.operators.similarity import (
-        _ivfpq_encode_np, _ivfpq_train_np)
     C, rbooks = _ivfpq_train_np(X, n_lists=8, m=8, ks=16)
     assign, rcodes = _ivfpq_encode_np(X, C, rbooks)
-    irows = []
-    for qid in [i for i in ids if i < 5]:
-        qi = int(np.nonzero(ids == qid)[0][0])
-        s = C[assign] @ X[qi] + _pq_adc_ip_np(X[qi], rbooks, rcodes)
-        keep = np.lexsort((ids, -s))
-        rk = 0
-        for b in keep:
-            if ids[b] == qid:
-                continue
-            rk += 1
-            if rk > 5:
-                break
-            irows.append({"q_id": int(qid), "vec_id": int(ids[b]),
-                          "adc_ip": float(s[b]), "rk": rk})
-    write("ivfpq_topk_probe_all", pa.table({
-        "q_id": pa.array([r["q_id"] for r in irows], pa.int64()),
-        "vec_id": pa.array([r["vec_id"] for r in irows], pa.int64()),
-        "adc_ip": pa.array([r["adc_ip"] for r in irows], pa.float64()),
-        "rk": pa.array([r["rk"] for r in irows], pa.int32()),
-    }))
+    write("ivfpq_topk_probe_all", _topk_table(
+        ids, X, lambda q: (ids, C[assign] @ q
+                           + _pq_adc_ip_np(q, rbooks, rcodes))))
+
     # persisted-index twin (nprobe=2 of 8): same model as above, but
     # each query scores ONLY vectors assigned to its 2 nearest coarse
     # lists — the pruning the Spark side realizes as list_id
     # PartitionFilters over stored codes (no re-encode)
-    xrows = []
-    for qid in [i for i in ids if i < 5]:
-        qi = int(np.nonzero(ids == qid)[0][0])
-        qd = ((C - X[qi]) ** 2).sum(axis=1)
-        plists = np.argsort(qd, kind="stable")[:2]
+    def probe2(q: np.ndarray):
+        plists = np.argsort(((C - q) ** 2).sum(axis=1), kind="stable")[:2]
         mask = np.isin(assign, plists)
-        sub_ids = ids[mask]
-        s = C[assign[mask]] @ X[qi] + _pq_adc_ip_np(X[qi], rbooks,
-                                                    rcodes[mask])
-        keep = np.lexsort((sub_ids, -s))
-        rk = 0
-        for b in keep:
-            if sub_ids[b] == qid:
-                continue
-            rk += 1
-            if rk > 5:
-                break
-            xrows.append({"q_id": int(qid), "vec_id": int(sub_ids[b]),
-                          "adc_ip": float(s[b]), "rk": rk})
-    write("ivfpq_indexed_topk", pa.table({
-        "q_id": pa.array([r["q_id"] for r in xrows], pa.int64()),
-        "vec_id": pa.array([r["vec_id"] for r in xrows], pa.int64()),
-        "adc_ip": pa.array([r["adc_ip"] for r in xrows], pa.float64()),
-        "rk": pa.array([r["rk"] for r in xrows], pa.int32()),
-    }))
+        return ids[mask], (C[assign[mask]] @ q
+                           + _pq_adc_ip_np(q, rbooks, rcodes[mask]))
+    write("ivfpq_indexed_topk", _topk_table(ids, X, probe2))
     # SemDeDup twin: shared kernels (_kmeans_np coarse model over the
     # same id-sorted vectors = the Spark side's full-corpus-at-gate-
     # scale sample, _centroid_dists assignment, _semdedup_prune_np
     # greedy leader prune per cluster) -> kept ids hash bit-exact.
     # Per-sf like the PQ twins (same init_sample assertion above).
-    from org_dharts_dia_tesseract_spark.operators.similarity import (
-        _centroid_dists, _kmeans_np, _semdedup_prune_np)
     C8 = _kmeans_np(X, 8, 3)
     sd_assign = _centroid_dists([list(map(float, c)) for c in C8])(
         pd.Series(list(X))).argmin(axis=1)
-    sd_ids, sd_lists = [], []
-    for c in range(8):
-        mask = sd_assign == c
-        for kid in _semdedup_prune_np(ids[mask], X[mask], 0.35):
-            sd_ids.append(int(kid))
-            sd_lists.append(c)
-    write("semdedup_kept", pa.table({
-        "vec_id": pa.array(sd_ids, pa.int64()),
-        "list_id": pa.array(sd_lists, pa.int32()),
-    }))
+    kept = pa.Table.from_pylist(
+        [{"vec_id": int(kid), "list_id": c} for c in range(8)
+         for kid in _semdedup_prune_np(ids[sd_assign == c],
+                                       X[sd_assign == c], 0.35)],
+        schema=pa.schema({"vec_id": pa.int64(), "list_id": pa.int32()}))
+    write("semdedup_kept", kept)
     # semdedup_indexed twin: the persisted-index path prunes the SAME
     # clustering (ivf_write_index trains kmeans_centroids with identical
     # defaults over the identical id-sorted full-corpus-at-gate-scale
     # sample), so the kept set is bit-identical to semdedup_kept's —
     # what the gate adds is the read path: assignment comes from stored
     # list_id partitions, never an assignment UDF.
-    write("semdedup_indexed", pa.table({
-        "vec_id": pa.array(sd_ids, pa.int64()),
-        "list_id": pa.array(sd_lists, pa.int32()),
-    }))
+    write("semdedup_indexed", kept)
     write("ocr_unlv_text", _unlv_table(hier))
     write("ocr_training_corpus", _training_table(spans))
-    write("ocr_annotated_pages", _annotated_table(corpus, CAP_ANNOTATED))
-    write("ocr_page_osd", _osd_table(corpus, CAP_MEDIA))
-    write("ocr_tiff_merge", _tiff_merge_table(corpus, CAP_MEDIA))
+    write("ocr_annotated_pages", _annotated_table(corpus,
+                                                  _ANNOTATED_DOC_CAP))
+    write("ocr_page_osd", _osd_table(corpus, _MEDIA_DOC_CAP))
+    write("ocr_tiff_merge", _tiff_merge_table(corpus, _MEDIA_DOC_CAP))
     write("html_main_content", _html_main_table(sf_dir))
 
 

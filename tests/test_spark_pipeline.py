@@ -4,6 +4,8 @@ smoke. Heavier Spark tests live here; oracle tests stay Spark-free."""
 
 from __future__ import annotations
 
+import os
+
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
@@ -122,6 +124,14 @@ def test_driver_contract_entry(spark):
     rows_only_allowed = {"html_main_content"}
     for name in set(qs) - set(oq):
         assert name.startswith("ocr_") or name in rows_only_allowed, name
+    # every parquet-oracled gate has its expectation (oracle_sql skips a
+    # missing file, which would silently demote the gate to rows-only) ...
+    for name in list(e._RASTER_GATES) + ["html_main_content"]:
+        assert name in oq, f"{name}: no tests/expected/{name}.parquet"
+    # ... and every expectation file belongs to a registered gate
+    stems = {os.path.splitext(f)[0] for f in os.listdir(e._EXPECTED_DIR)
+             if f.endswith(".parquet")}
+    assert stems <= set(qs), sorted(stems - set(qs))
 
 
 def test_whitelist_and_psm_flow_through(spark, corpus):
